@@ -12,17 +12,16 @@
     python -m lucene_msmarco_spark.cli qpp --index idx/ --queries queries.tsv \
         --res run.res --predictor nqc
     python -m lucene_msmarco_spark.cli sparsevecs --index idx/ --out vecs/
-    python -m lucene_msmarco_spark.cli ingest --input batch/ --index sidx/
-    python -m lucene_msmarco_spark.cli retrieve --index sidx/ ...  # BMW path
+    python -m lucene_msmarco_spark.cli ingest --input batch/ --index idx/
 
-``index`` writes an ``IndexBuildPipeline`` output (manifest + parquet
-stages; checkpoint-resumable — rerunning resumes after a kill).
-``ingest`` maintains the incremental SEGMENTED serving index
-(``SegmentedIndexWriter``: content-addressed appends, size-tiered
-auto-compaction, optional Structured-Streaming backfill). ``retrieve``
-auto-detects the layout: segmented/compact dirs serve BM25 through the
-compressed Block-Max path; pipeline dirs (and non-BM25 models) score
-the row-level form.
+Every index command reads and writes ONE on-disk format, the
+``SegmentedIndexWriter`` dir (content-addressed appends, size-tiered
+auto-compaction, per-op lineage in its manifest). ``index`` builds it
+with one append: re-running with the same input is a no-op, and a dir
+that already holds a different batch is refused (the reference refuses
+a non-empty index dir, ``MsMarcoIndexer.java:49-52``; ``ingest`` adds
+batches). ``retrieve`` serves BM25 through the compressed Block-Max path
+and the other models from the row-level form the blobs decode to.
 """
 
 from __future__ import annotations
@@ -56,113 +55,86 @@ def _stop(args, spark: SparkSession) -> None:
         spark.stop()
 
 
-def load_pipeline_index(spark: SparkSession, index_dir: str):
-    """Rehydrate an InvertedIndex from an IndexBuildPipeline output.
-
-    The analyzer used at build time is restored from the pipeline's
-    ``_config.json`` sidecar — queries compiled against the rehydrated
-    index must run the SAME analyzer chain the documents were indexed
-    with, or retrieval silently degrades (e.g. an index built with
-    ``--analyzer simple`` searched with Porter-stemmed query terms).
-    """
-    import os
-
-    from .operators.index import GlobalStats, InvertedIndex
-
-    analyzer = "english"
-    cfg_path = os.path.join(index_dir, "_config.json")
-    if os.path.exists(cfg_path):
-        with open(cfg_path) as f:
-            analyzer = json.load(f).get("analyzer", analyzer)
-
-    docs = spark.read.parquet(f"{index_dir}/doc_ids")
-    tokens = spark.read.parquet(f"{index_dir}/tokens_tf")
-    doc_stats = spark.read.parquet(f"{index_dir}/doc_stats")
-    term_stats = spark.read.parquet(f"{index_dir}/term_stats")
-    row = doc_stats.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg("doclen").alias("avgdl"),
-        F.sum("doclen").alias("cf"),
-    ).collect()[0]
-    stats = GlobalStats(
-        n_docs=int(row["n"]),
-        avgdl=float(row["avgdl"] or 0.0),
-        total_cf=int(row["cf"] or 0),
-    )
-    return InvertedIndex(
-        docs=docs, tokens=tokens, doc_stats=doc_stats,
-        term_stats=term_stats, stats=stats, analyzer=analyzer,
-    )
-
-
 def load_serving_index(spark: SparkSession, index_dir: str):
-    """Detect and open whichever index layout lives under ``index_dir``.
+    """Open the ``SegmentedIndexWriter`` dir under ``index_dir`` as a
+    CompactIndex — the compressed serving artifact. Commands that need
+    token-level access (qpp term stats, sparse vectors, non-BM25
+    scoring) decode it with ``to_inverted_index``."""
+    from .streaming.incremental import SegmentedIndexWriter
 
-    Returns ``(kind, index)`` where kind is:
-
-    - ``"compact"`` — a ``CompactIndex.save`` artifact (``_stats.json``
-      + ``postings/``) or a ``SegmentedIndexWriter`` dir (manifest +
-      ``seg-*`` generations); index is a CompactIndex — the compressed
-      serving artifact, scored via Block-Max WAND;
-    - ``"rows"`` — an ``IndexBuildPipeline`` stage dir; index is the
-      row-level InvertedIndex (every scoring model, feedback, QPP).
-    """
-    import glob
-    import os
-
-    if os.path.exists(os.path.join(index_dir, "_stats.json")):
-        from .operators.postings import CompactIndex
-
-        return "compact", CompactIndex.load(spark, index_dir)
-    if glob.glob(os.path.join(index_dir, "seg-*")):
-        from .streaming.incremental import SegmentedIndexWriter
-
-        return "compact", SegmentedIndexWriter.open(spark, index_dir).load()
-    return "rows", load_pipeline_index(spark, index_dir)
+    return SegmentedIndexWriter.open(spark, index_dir).load()
 
 
-def load_rows_index(spark: SparkSession, index_dir: str):
-    """Row-level InvertedIndex from ANY index layout: pipeline dirs load
-    directly; compact/writer layouts rehydrate through the distributed
-    blob decode (``CompactIndex.to_inverted_index``). For the commands
-    that need token-level access (qpp term stats, sparse vectors,
-    non-BM25 scoring)."""
-    kind, idx = load_serving_index(spark, index_dir)
-    return idx.to_inverted_index() if kind == "compact" else idx
-
-
-def _open_serving(spark: SparkSession, index_dir: str):
-    """CLI-facing load_serving_index: curated diagnostics (the writer's
-    pre-sidecar / fingerprint-version refusals) exit cleanly instead of
-    dumping a stack trace — the same operator experience `ingest`
-    already gives for the identical conditions."""
+def _open_index(spark: SparkSession, index_dir: str):
+    """CLI-facing load_serving_index: the writer's curated refusals
+    (retired layouts, pre-sidecar dirs, fingerprint-version mismatch)
+    exit cleanly instead of dumping a stack trace."""
     try:
         return load_serving_index(spark, index_dir)
     except (FileNotFoundError, ValueError) as e:
         raise SystemExit(str(e)) from e
 
 
-def _open_rows(spark: SparkSession, index_dir: str):
+def _open_writer(spark: SparkSession, index_dir: str, analyzer):
+    """The writer over ``index_dir``, for ``index`` and ``ingest``: an
+    existing dir restores its persisted config (or refuses, see
+    ``SegmentedIndexWriter.open``); a new one takes ``analyzer``."""
+    import os
+
+    from .streaming.incremental import BuildConfig, SegmentedIndexWriter
+
     try:
-        return load_rows_index(spark, index_dir)
+        writer = SegmentedIndexWriter.open(spark, index_dir)
     except (FileNotFoundError, ValueError) as e:
         raise SystemExit(str(e)) from e
+    if not os.path.exists(writer.config_path):
+        return SegmentedIndexWriter(
+            spark, index_dir, BuildConfig(analyzer=analyzer or "english")
+        )
+    if analyzer and analyzer != writer.config.analyzer:
+        raise SystemExit(
+            f"index {index_dir} was built with analyzer "
+            f"{writer.config.analyzer!r}; --analyzer {analyzer!r} "
+            "would mix token spaces"
+        )
+    return writer
+
+
+def _print_state(writer, **extra) -> None:
+    st = writer.state()
+    print(json.dumps({
+        **extra,
+        "n_docs": st["n_docs"],
+        "live_generations": len(st["live"]),
+        "next_gen": st["next_gen"],
+        "index": writer.index_dir,
+    }))
 
 
 def cmd_index(args) -> None:
-    from .streaming.incremental import BuildConfig, IndexBuildPipeline
+    """Build an index dir from one transcript batch: one writer append.
+    The append is content-addressed, so re-running with the same input
+    is a no-op (a killed run re-runs cleanly). A dir that already holds
+    a DIFFERENT batch is refused: appending there would silently index
+    an edited input's docs a second time."""
+    from .sources.table_format import read_transcripts
 
     spark = _spark(args)
-    pipe = IndexBuildPipeline(
-        spark, args.input, args.out,
-        BuildConfig(analyzer=args.analyzer),
-    )
-    manifest = pipe.run(resume=not args.no_resume)
-    executed = manifest.pop("_executed")["stages"]
-    print(json.dumps({
-        "executed_stages": executed,
-        "rows": {k: v["rows"] for k, v in manifest.items()},
-    }))
+    writer = _open_writer(spark, args.out, args.analyzer)
+    batch = read_transcripts(spark, args.input)
+    committed = {
+        e.get("batch") for e in writer._entries() if e["op"] == "append"
+    }
+    appended = not committed
+    if appended:
+        writer.append(batch)
+    elif writer._fingerprint(batch) not in committed:
+        raise SystemExit(
+            f"{args.out} already holds an index of a different batch; "
+            "add batches to it with `ingest`, or build into a new "
+            "directory"
+        )
+    _print_state(writer, appended=appended)
     _stop(args, spark)
 
 
@@ -172,9 +144,9 @@ def cmd_retrieve(args) -> None:
     from .sources.writers import write_trec_run
 
     spark = _spark(args)
-    kind, idx = _open_serving(spark, args.index)
+    idx = _open_index(spark, args.index)
     queries = read_queries_tsv(spark, args.queries)
-    engine = "bmw" if kind == "compact" and args.model == "bm25" else "rows"
+    engine = "bmw" if args.model == "bm25" else "rows"
     if engine == "bmw":
         # the compressed serving path: broadcast query bag, one task per
         # segment, Block-Max scoring — postings never shuffle
@@ -182,13 +154,11 @@ def cmd_retrieve(args) -> None:
 
         qt = compile_queries(queries, idx.analyzer)
         run = bmw_search(idx, qt, k=args.k)
-    elif kind == "compact":
+    else:
         # non-BM25 models score off the row-level form; rehydrate the
         # blobs (decode is distributed, mapInPandas) and reuse `search`
         run = search(idx.to_inverted_index(), queries,
                      model=args.model, k=args.k)
-    else:
-        run = search(idx, queries, model=args.model, k=args.k)
     write_trec_run(run, args.out, run_name=args.run_name)
     print(json.dumps({
         "engine": engine, "queries": queries.count(), "out": args.out,
@@ -205,50 +175,10 @@ def cmd_ingest(args) -> None:
     micro-batch, exactly-once under replays."""
     import os
 
-    from .streaming.incremental import (
-        BuildConfig,
-        MergePolicy,
-        SegmentedIndexWriter,
-        stream_append,
-    )
+    from .streaming.incremental import MergePolicy, stream_append
 
     spark = _spark(args)
-    manifest_path = os.path.join(args.index, "_manifest.jsonl")
-    if os.path.exists(manifest_path) or os.path.exists(
-        os.path.join(args.index, "_config.json")
-    ):
-        # a pipeline build dir also carries _config.json + a manifest,
-        # but its rows are keyed by "stage", not "gen" — appending into
-        # it would corrupt nothing but crash deep in state(); refuse up
-        # front with the right pointer
-        first = ""
-        if os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                first = f.readline()
-        if first.strip() and "\"stage\"" in first:
-            raise SystemExit(
-                f"{args.index} is an IndexBuildPipeline output, not a "
-                "SegmentedIndexWriter dir; resume it with `index`, or "
-                "point ingest at a (new or writer) directory"
-            )
-        try:
-            # open() restores the persisted config, or refuses: a
-            # pre-sidecar dir (no analyzer guessing), a pipeline build
-            # dir's config, or a fingerprint-format mismatch
-            writer = SegmentedIndexWriter.open(spark, args.index)
-        except (FileNotFoundError, ValueError) as e:
-            raise SystemExit(str(e)) from e
-        if args.analyzer and args.analyzer != writer.config.analyzer:
-            raise SystemExit(
-                f"index {args.index} was built with analyzer "
-                f"{writer.config.analyzer!r}; --analyzer {args.analyzer!r} "
-                "would mix token spaces"
-            )
-    else:
-        writer = SegmentedIndexWriter(
-            spark, args.index,
-            BuildConfig(analyzer=args.analyzer or "english"),
-        )
+    writer = _open_writer(spark, args.index, args.analyzer)
     try:
         policy = MergePolicy(merge_factor=args.merge_factor)
     except ValueError as e:
@@ -276,13 +206,7 @@ def cmd_ingest(args) -> None:
 
         writer.append(read_transcripts(spark, args.input))
         writer.maybe_compact(policy)
-    st = writer.state()
-    print(json.dumps({
-        "n_docs": st["n_docs"],
-        "live_generations": len(st["live"]),
-        "next_gen": st["next_gen"],
-        "index": args.index,
-    }))
+    _print_state(writer)
     _stop(args, spark)
 
 
@@ -314,7 +238,7 @@ def cmd_qpp(args) -> None:
     from .sources.readers import read_queries_tsv, read_res
 
     spark = _spark(args)
-    idx = _open_rows(spark, args.index)
+    idx = _open_index(spark, args.index).to_inverted_index()
     queries = read_queries_tsv(spark, args.queries)
     run = read_res(spark, args.res).cache()
     qt = compile_queries(queries, idx.analyzer)
@@ -343,7 +267,7 @@ def cmd_sparsevecs(args) -> None:
     from .sources.writers import sparse_vectors
 
     spark = _spark(args)
-    idx = _open_rows(spark, args.index)
+    idx = _open_index(spark, args.index).to_inverted_index()
     vecs = sparse_vectors(idx, weighting=args.weighting)
     vecs.write.mode("overwrite").parquet(args.out)
     print(json.dumps({"rows": spark.read.parquet(args.out).count()}))
@@ -351,50 +275,26 @@ def cmd_sparsevecs(args) -> None:
 
 
 def cmd_compact(args) -> None:
-    """Index-artifact lifecycle maintenance. Without ``--out``: force a
-    full merge of a ``SegmentedIndexWriter`` dir's live generations (the
+    """Force a full merge of an index dir's live generations (the
     explicit Lucene forceMerge analog; routine maintenance happens
-    automatically via the tiered policy in ``ingest``). With ``--out``:
-    export ANY index layout (pipeline / writer / compact) as a
-    ``CompactIndex.save`` serving artifact — postings parquet + stats
-    sidecar, the shippable form ``retrieve`` serves through the
-    Block-Max path."""
+    automatically via the tiered policy in ``ingest``)."""
+    import glob
+    import os
+
     spark = _spark(args)
-    if args.out:
-        kind, idx = _open_serving(spark, args.index)
-        if kind == "rows":
-            from .operators.postings import CompactIndex
-
-            idx = CompactIndex.from_index(idx)
-        idx.save(args.out)
-        print(json.dumps({
-            "exported": args.out, "n_docs": idx.stats.n_docs,
-            "from": kind,
-        }))
-    else:
-        import glob
-        import os
-
-        from .streaming.incremental import SegmentedIndexWriter
-
-        if not glob.glob(os.path.join(args.index, "seg-*")):
-            raise SystemExit(
-                f"{args.index} is not a SegmentedIndexWriter layout "
-                "(no seg-* generations); only writer dirs support "
-                "merge — use --out to export this index as a serving "
-                "artifact instead"
-            )
-        try:
-            writer = SegmentedIndexWriter.open(spark, args.index)
-        except (FileNotFoundError, ValueError) as e:
-            raise SystemExit(str(e)) from e
-        entry = writer.compact()
-        st = writer.state()
-        print(json.dumps({
-            "merged": entry["replaces"] if entry else [],
-            "live_generations": len(st["live"]),
-            "n_docs": st["n_docs"],
-        }))
+    if not glob.glob(os.path.join(args.index, "seg-*")):
+        raise SystemExit(
+            f"{args.index} holds no seg-* generations: not an index "
+            "dir; build one with `index`"
+        )
+    writer = _open_writer(spark, args.index, None)
+    entry = writer.compact()
+    st = writer.state()
+    print(json.dumps({
+        "merged": entry["replaces"] if entry else [],
+        "live_generations": len(st["live"]),
+        "n_docs": st["n_docs"],
+    }))
     _stop(args, spark)
 
 
@@ -570,13 +470,23 @@ def cmd_events(args) -> None:
 
     Incremental use: re-run with the same ``--checkpoint`` as new files
     land — consumed files are skipped by the offset log. Keep
-    ``--no-drain`` on those runs (a drain advances the watermark ~10
-    days past the data, which would late-drop every later real event);
-    drain only the final run.
+    ``--no-drain`` on those runs (a drain advances the watermark past
+    the data by the watermark delay + the window (hourly) or gap
+    (sessionize) + a 1-day margin, which would late-drop every later
+    real event in that horizon); drain only the final run.
     """
     import os
 
-    from .streaming.analytics import hourly_backfill, sessionize_backfill
+    from .streaming.analytics import (
+        hourly_backfill,
+        interval_seconds,
+        sessionize_backfill,
+    )
+
+    try:
+        interval_seconds(args.watermark)
+    except ValueError as e:
+        raise SystemExit(str(e)) from e
 
     ckpt = args.checkpoint or args.out.rstrip("/") + "_ckpt"
     drain_src = os.path.join(ckpt, "__drain_source__")
@@ -620,11 +530,14 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--master", default=None)
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    pi = sub.add_parser("index", help="build the inverted index (resumable)")
+    pi = sub.add_parser(
+        "index", help="build an index dir from one batch (idempotent)"
+    )
     pi.add_argument("--input", required=True)
     pi.add_argument("--out", required=True)
-    pi.add_argument("--analyzer", default="english")
-    pi.add_argument("--no-resume", action="store_true")
+    pi.add_argument("--analyzer", default=None,
+                    help="analyzer for a NEW index (default english; "
+                         "existing indexes restore theirs)")
     pi.set_defaults(fn=cmd_index)
 
     pr = sub.add_parser("retrieve", help="batch top-k search -> TREC res")
@@ -645,8 +558,7 @@ def main(argv: list[str] | None = None) -> None:
     )
     pg.add_argument("--input", required=True,
                     help="transcript parquet path / table ref")
-    pg.add_argument("--index", required=True,
-                    help="SegmentedIndexWriter directory")
+    pg.add_argument("--index", required=True, help="index directory")
     pg.add_argument("--analyzer", default=None,
                     help="analyzer for a NEW index (existing indexes "
                          "restore theirs from _config.json)")
@@ -676,14 +588,9 @@ def main(argv: list[str] | None = None) -> None:
     ps.set_defaults(fn=cmd_sparsevecs)
 
     pc = sub.add_parser(
-        "compact",
-        help="force-merge a segmented index's live generations, or "
-             "export any index layout as a CompactIndex serving "
-             "artifact (--out)",
+        "compact", help="force-merge an index's live generations"
     )
     pc.add_argument("--index", required=True)
-    pc.add_argument("--out", default=None,
-                    help="export target (CompactIndex.save dir)")
     pc.set_defaults(fn=cmd_compact)
 
     pa = sub.add_parser(
@@ -747,7 +654,8 @@ def main(argv: list[str] | None = None) -> None:
                          "backfill incrementally (with --no-drain)")
     pv.add_argument("--gap", type=int, default=1800,
                     help="sessionize gap seconds")
-    pv.add_argument("--watermark", default="2 hours")
+    pv.add_argument("--watermark", default="2 hours",
+                    help="<int> <second|minute|hour|day>[s]")
     pv.add_argument("--no-drain", action="store_true",
                     help="leave tail windows/sessions in state "
                          "(incremental runs / live-stream handoff)")

@@ -1,6 +1,5 @@
 """Small filesystem persistence helpers shared by the sidecar and
-manifest writers (the incremental index writer, ``CompactIndex``
-export, the IVF model store).
+manifest writers (the incremental index writer, the IVF model store).
 
 Kill-safety rules, applied uniformly:
 

@@ -17,9 +17,9 @@ fetch one) the SAME call sites fall back to:
 - **writes**: parquet + a ``_commit.json`` sidecar carrying the
   snapshot duties an Iceberg commit would (row count, schema, wall
   time, monotonically increasing commit id) — the same manifest
-  discipline as ``streaming.incremental.SegmentedIndexWriter`` /
-  ``IndexBuildPipeline``, whose JSON manifests already stand in for
-  Iceberg snapshot/lineage/atomic-commit (BASELINE.md "Iceberg note").
+  discipline as ``streaming.incremental.SegmentedIndexWriter``, whose
+  JSON manifest already stands in for Iceberg snapshot/lineage/atomic-
+  commit (BASELINE.md "Iceberg note").
 
 Everything above this module only ever sees DataFrames, so the swap is
 invisible to the query paths; a deployment with the jar lights up the

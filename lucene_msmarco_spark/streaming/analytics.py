@@ -53,6 +53,7 @@ the sentinel — fresh events advance the watermark continuously.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import tempfile
 from collections.abc import Callable, Iterator
@@ -103,16 +104,26 @@ DRAIN_EVENT_TYPE = "__drain__"
 DRAIN_MARGIN_SEC = 86_400
 
 
-def interval_seconds(spark: SparkSession, interval: str) -> int:
-    """Length of a Spark interval string (e.g. ``"2 hours"``) in
-    seconds — used to size the drain horizon from the actual watermark
-    instead of a fixed constant."""
-    return int(
-        spark.sql(
-            "SELECT unix_seconds(timestamp'1970-01-01 00:00:00Z' "
-            f"+ INTERVAL {interval})"
-        ).collect()[0][0]
+_UNIT_SEC = {"second": 1, "minute": 60, "hour": 3600, "day": 86_400}
+
+
+def interval_seconds(interval: str) -> int:
+    """Length of an ``"<int> <second|minute|hour|day>[s]"`` interval
+    string (e.g. ``"2 hours"``) in seconds — used to size the drain
+    horizon from the actual watermark instead of a fixed constant. A day
+    is a fixed 86,400 s (the watermark is an instant, so no
+    session-zone DST arithmetic applies). Anything else raises
+    ``ValueError``: the string comes from the command line and is never
+    pasted into SQL."""
+    m = re.fullmatch(
+        r"\s*(\d+)\s+(second|minute|hour|day)s?\s*", interval, re.I
     )
+    if m is None:
+        raise ValueError(
+            f"watermark {interval!r} is not '<int> "
+            "<second|minute|hour|day>[s]'"
+        )
+    return int(m.group(1)) * _UNIT_SEC[m.group(2).lower()]
 
 
 def event_time(col: str = "ts") -> Column:
@@ -530,11 +541,11 @@ def hourly_backfill(
         lambda ev: hourly_counts(ev, watermark=watermark),
         sink_dir,
         checkpoint_dir,
-        drain_filter=F.col("event_type") != DRAIN_EVENT_TYPE,
+        drain_filter=~F.col("event_type").eqNullSafe(DRAIN_EVENT_TYPE),
         drain=drain,
         source_options=source_options,
         # sentinel must clear watermark delay + the 1h window
-        horizon_sec=interval_seconds(spark, watermark)
+        horizon_sec=interval_seconds(watermark)
         + 3600
         + DRAIN_MARGIN_SEC,
     )
@@ -558,12 +569,12 @@ def sessionize_backfill(
         lambda ev: sessionize(ev, gap_sec=gap_sec, watermark=watermark),
         sink_dir,
         checkpoint_dir,
-        drain_filter=F.col("user_id") != DRAIN_USER_ID,
+        drain_filter=~F.col("user_id").eqNullSafe(DRAIN_USER_ID),
         drain=drain,
         source_options=source_options,
         # sentinel must clear watermark delay + the session gap (+1s
         # timeout slack, absorbed by the margin)
-        horizon_sec=interval_seconds(spark, watermark)
+        horizon_sec=interval_seconds(watermark)
         + gap_sec
         + DRAIN_MARGIN_SEC,
     )

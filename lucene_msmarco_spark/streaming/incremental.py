@@ -1,30 +1,24 @@
-"""Checkpoint-resumable index-build pipeline with per-partition lineage,
-plus a Structured-Streaming incremental ingest path.
+"""The engine's one on-disk index: the doc-range-segmented
+``SegmentedIndexWriter`` dir (content-addressed appends, size-tiered
+compaction, per-generation gdf sidecars), plus ``stream_append``, a
+Structured-Streaming ``foreachBatch`` sink over the writer.
 
 North-rule requirements covered here:
 - "merge partial segments into a global index with per-partition lineage
-  and checkpoint-resumable stages": every stage is a pure function of
-  (input fingerprint, config hash); it writes parquet + a manifest row
-  recording stage name, hashes, row count, per-partition row counts and
-  wall time. Re-running the pipeline skips any stage whose manifest row
-  matches and whose output ``_SUCCESS`` exists — kill it between stages
-  and the next run resumes exactly where it stopped.
-- incremental build: ``IncrementalIngest`` uses
-  ``readStream.trigger(availableNow=True)`` + ``foreachBatch`` to turn
-  newly-landed transcript files into partial posting segments (the
-  Lucene "new segment per flush" analog, cf. the reference's
-  ``IndexWriter`` lifecycle ``indexing/MsMarcoIndexer.java:48-60``), and
-  ``merge_segments`` compacts partials into the global postings table
-  (Lucene background-merge analog, SURVEY.md §4 segment row).
-
-The reference's only idempotence device is refusing to overwrite a
-non-empty index dir (``MsMarcoIndexer.java:49-52``); the engine replaces
-that with content-addressed stage manifests.
+  and checkpoint-resumable stages": every append and compaction commits
+  one manifest row recording its doc/segment ranges, per-segment blob
+  row counts and wall time. Appends are content-addressed, so re-running
+  a killed build re-appends exactly the batches that never committed.
+- incremental build: each append (or streamed micro-batch) becomes a new
+  generation of segments (the Lucene "new segment per flush" analog,
+  cf. the reference's ``IndexWriter`` lifecycle
+  ``indexing/MsMarcoIndexer.java:48-60``), and ``compact`` /
+  ``maybe_compact`` merge generations (Lucene background-merge analog,
+  SURVEY.md §4 segment row).
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import time
@@ -34,10 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fsutil import atomic_write_json as _atomic_write_json
-from ..operators.index import assign_doc_ids, build_index
-from ..operators.postings import encode_postings
-
-STAGES = ("doc_ids", "tokens_tf", "doc_stats", "term_stats", "postings")
 
 # Batch-fingerprint format version. Bump whenever _fingerprint's hash
 # text changes (v2 = xxhash64 over to_json(struct(*), timeZone=UTC);
@@ -49,361 +39,14 @@ STAGES = ("doc_ids", "tokens_tf", "doc_stats", "term_stats", "postings")
 FP_VERSION = 2
 
 
-def _sha(obj) -> str:
-    return hashlib.sha256(
-        json.dumps(obj, sort_keys=True, default=str).encode()
-    ).hexdigest()[:16]
-
-
-def input_fingerprint(path: str) -> str:
-    """Content-address the input directory by (name, size, mtime) of its
-    data files — cheap, no data read."""
-    entries = []
-    for root, dirs, files in os.walk(path):
-        # os.walk's subdirectory order is filesystem-dependent; sort it
-        # in place so an identical tree always hashes identically (the
-        # fingerprint gates checkpoint resume)
-        dirs.sort()
-        for f in sorted(files):
-            if f.startswith(("_", ".")):
-                continue
-            st = os.stat(os.path.join(root, f))
-            # nanosecond mtime: truncating to whole seconds would let a
-            # same-size rewrite within one second keep the fingerprint,
-            # and resume would silently serve the stale index
-            entries.append((os.path.relpath(os.path.join(root, f), path),
-                            st.st_size, st.st_mtime_ns))
-    return _sha(entries)
-
-
-def _partition_lineage(df: DataFrame) -> list[dict]:
-    rows = (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid").agg(F.count(F.lit(1)).alias("rows"))
-        .orderBy("_pid")
-        .collect()
-    )
-    return [{"partition": int(r["_pid"]), "rows": int(r["rows"])}
-            for r in rows]
-
-
 @dataclass
 class BuildConfig:
     analyzer: str = "english"
     fold_numbers: bool = True
     block_size: int = 128
-    salt_df_threshold: int = 250_000
-    n_salts: int = 32
     #: target docs per compact-index segment (postings.derive_n_segments);
     #: lower it in tests to exercise multi-segment layouts at toy scale
     docs_per_segment: int = 262_144
-
-    def hash(self) -> str:
-        return _sha(self.__dict__)
-
-
-@dataclass
-class IndexBuildPipeline:
-    """Staged transcripts -> inverted-index build over parquet checkpoints.
-
-    Layout under ``out_dir``::
-
-        _manifest.jsonl           one JSON row per completed stage
-        doc_ids/  tokens_tf/  doc_stats/  term_stats/  postings/
-    """
-
-    spark: SparkSession
-    input_path: str
-    out_dir: str
-    config: BuildConfig = field(default_factory=BuildConfig)
-
-    # ---- manifest ------------------------------------------------------
-
-    @property
-    def manifest_path(self) -> str:
-        return os.path.join(self.out_dir, "_manifest.jsonl")
-
-    def manifest(self) -> dict[str, dict]:
-        out: dict[str, dict] = {}
-        if os.path.exists(self.manifest_path):
-            with open(self.manifest_path) as f:
-                for line in f:
-                    if line.strip():
-                        row = json.loads(line)
-                        out[row["stage"]] = row  # last write wins
-        return out
-
-    def _stage_dir(self, stage: str) -> str:
-        return os.path.join(self.out_dir, stage)
-
-    def _is_done(self, stage: str, fp: str, cfg_hash: str) -> bool:
-        row = self.manifest().get(stage)
-        return bool(
-            row
-            and row["input_fingerprint"] == fp
-            and row["config_hash"] == cfg_hash
-            and os.path.exists(
-                os.path.join(self._stage_dir(stage), "_SUCCESS")
-            )
-        )
-
-    def _record(self, stage: str, fp: str, cfg_hash: str,
-                df: DataFrame, wall_s: float) -> None:
-        out = self.spark.read.parquet(self._stage_dir(stage))
-        lineage = _partition_lineage(out)
-        row = {
-            "stage": stage,
-            "input_fingerprint": fp,
-            "config_hash": cfg_hash,
-            "rows": sum(p["rows"] for p in lineage),
-            "partitions": lineage,
-            "wall_s": round(wall_s, 3),
-            "completed_at": time.time(),
-        }
-        os.makedirs(self.out_dir, exist_ok=True)
-        with open(self.manifest_path, "a") as f:
-            f.write(json.dumps(row) + "\n")
-
-    # ---- stages --------------------------------------------------------
-
-    def run(self, resume: bool = True) -> dict[str, dict]:
-        """Execute all stages (skipping completed ones when ``resume``).
-        Returns the manifest. Kill-safe: each stage commits atomically via
-        parquet ``_SUCCESS`` + its manifest row."""
-        fp = input_fingerprint(self.input_path)
-        ch = self.config.hash()
-        executed: list[str] = []
-        # persist the build config READABLY (not just its hash) so a
-        # later load_pipeline_index can restore analyzer etc. — the
-        # manifest rows alone only carry config_hash
-        os.makedirs(self.out_dir, exist_ok=True)
-        _atomic_write_json(
-            os.path.join(self.out_dir, "_config.json"),
-            dict(self.config.__dict__, config_hash=ch),
-        )
-
-        def stage(name: str, fn) -> None:
-            if resume and self._is_done(name, fp, ch):
-                return
-            t0 = time.time()
-            df = fn()
-            df.write.mode("overwrite").parquet(self._stage_dir(name))
-            self._record(name, fp, ch, df, time.time() - t0)
-            executed.append(name)
-
-        stage("doc_ids", self._build_doc_ids)
-        stage("tokens_tf", self._build_tokens)
-        stage("doc_stats", self._build_doc_stats)
-        stage("term_stats", self._build_term_stats)
-        stage("postings", self._build_postings)
-        m = self.manifest()
-        m["_executed"] = {"stages": executed}
-        return m
-
-    def _build_doc_ids(self) -> DataFrame:
-        tr = self.spark.read.parquet(self.input_path)
-        return assign_doc_ids(tr, ["conv_id", "turn_idx"])
-
-    def _read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self._stage_dir(stage))
-
-    def _build_tokens(self) -> DataFrame:
-        docs = self._read("doc_ids")
-        idx = build_index(
-            docs,
-            analyzer=self.config.analyzer,
-            fold_numbers=self.config.fold_numbers,
-            cache=False,
-        )
-        return idx.tokens.select("term", "doc_id", "tf", "doclen")
-
-    def _build_doc_stats(self) -> DataFrame:
-        tokens = self._read("tokens_tf")
-        docs = self._read("doc_ids").select("doc_id")
-        per_doc = tokens.groupBy("doc_id").agg(
-            F.first("doclen").alias("doclen")
-        )
-        return docs.join(per_doc, "doc_id", "left").fillna(
-            0, subset=["doclen"]
-        )
-
-    def _build_term_stats(self) -> DataFrame:
-        tokens = self._read("tokens_tf")
-        return tokens.groupBy("term").agg(
-            F.count(F.lit(1)).cast("long").alias("df"),
-            F.sum("tf").alias("cf"),
-        )
-
-    def _build_postings(self) -> DataFrame:
-        tokens = self._read("tokens_tf")
-        return encode_postings(
-            tokens,
-            block_size=self.config.block_size,
-            salt_df_threshold=self.config.salt_df_threshold,
-            n_salts=self.config.n_salts,
-        )
-
-
-# ---------------------------------------------------------------------------
-# Structured-Streaming incremental ingest
-# ---------------------------------------------------------------------------
-
-@dataclass
-class IncrementalIngest:
-    """Transcript files land in ``input_dir``; each availableNow batch
-    becomes one partial postings segment under ``segments_dir``.
-    ``merge_segments`` compacts all segments into ``global_dir``."""
-
-    spark: SparkSession
-    input_dir: str
-    work_dir: str
-    config: BuildConfig = field(default_factory=BuildConfig)
-
-    @property
-    def segments_dir(self) -> str:
-        return os.path.join(self.work_dir, "segments")
-
-    @property
-    def checkpoint_dir(self) -> str:
-        return os.path.join(self.work_dir, "_stream_checkpoint")
-
-    @property
-    def global_dir(self) -> str:
-        return os.path.join(self.work_dir, "postings")
-
-    def ingest_available(self) -> int:
-        """Process all currently-available input files; returns the number
-        of batches (segments) written. Restart-safe via the stream
-        checkpoint (files already ingested are never re-read)."""
-        from ..sources.transcripts import TRANSCRIPT_SCHEMA
-
-        cfg = self.config
-        batches = {"n": 0}
-
-        def handle(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            base = assign_doc_ids(batch_df, ["conv_id", "turn_idx"])
-            # segment-local doc ids are offset by a per-segment base so
-            # ids stay globally unique (base = batch_id << 40; at
-            # 10^12-turn scale the base would come from a sequencer table)
-            docs = base.withColumn(
-                "doc_id",
-                (F.col("doc_id") + F.lit(int(batch_id) << 40)).cast("long"),
-            )
-            idx = build_index(
-                docs, analyzer=cfg.analyzer,
-                fold_numbers=cfg.fold_numbers, cache=False,
-            )
-            seg = encode_postings(
-                idx.tokens, block_size=cfg.block_size,
-                salt_df_threshold=cfg.salt_df_threshold,
-                n_salts=cfg.n_salts,
-            )
-            seg.write.mode("overwrite").parquet(
-                os.path.join(self.segments_dir, f"segment={batch_id}")
-            )
-            # assign_doc_ids eagerly persists its output; release it or
-            # a long backfill accumulates one cached doc store PER
-            # micro-batch in executor storage memory
-            base.unpersist()
-            batches["n"] += 1
-
-        q = (
-            self.spark.readStream.schema(TRANSCRIPT_SCHEMA)
-            .parquet(self.input_dir)
-            .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return batches["n"]
-
-    def merge_segments(self, layout: str = "segmented") -> DataFrame:
-        """Compact all partial segments into the global postings table.
-
-        ``layout="segmented"`` (default, the scale path): decode ->
-        doc-range re-segment, the SAME code path as
-        ``SegmentedIndexWriter.compact`` (postings_to_tokens ->
-        encode_postings_segmented with derive_n_segments) — every merge
-        task is bounded by docs-per-segment regardless of term skew, so
-        a Zipf-head term never funnels its whole posting list through
-        one task. Output rows carry SEGMENTED_SCHEMA (per-segment df/cf
-        + global ``gdf``).
-
-        NB: this class's batch doc-id bases (batch_id << 40) leave the
-        id space sparse, so range segments cluster per batch (skew
-        bounded by batch size, not docs_per_segment). The
-        ``SegmentedIndexWriter`` allocates DENSE bases and does not have
-        this caveat — prefer it for incremental ingest.
-
-        ``layout="termwise"``: the legacy one-blob-per-term merge
-        (decode -> concat -> re-encode per term). TOY-SCALE ONLY — the
-        per-term ``groupBy("term")`` task decodes and re-encodes a
-        Zipf-head term's entire posting list in one task; at corpus
-        scale prefer the default or ``SegmentedIndexWriter``.
-        """
-        import glob as _glob
-
-        if not _glob.glob(os.path.join(self.segments_dir, "segment=*")):
-            # no segment was ever ingested (empty landing day): produce
-            # an empty global table instead of a PATH_NOT_FOUND crash
-            from ..operators.postings import encode_postings_segmented
-
-            empty = self.spark.createDataFrame(
-                [], "term string, doc_id long, tf int, doclen int"
-            )
-            merged = encode_postings_segmented(
-                empty, self.config.block_size, 1, n_docs=0
-            )
-            merged.write.mode("overwrite").parquet(self.global_dir)
-            return self.spark.read.parquet(self.global_dir)
-        if layout == "segmented":
-            from ..operators.postings import (
-                derive_n_segments,
-                encode_postings_segmented,
-                postings_to_tokens,
-            )
-
-            segs = self.spark.read.option(
-                "basePath", self.segments_dir
-            ).parquet(os.path.join(self.segments_dir, "segment=*"))
-            tokens = postings_to_tokens(segs)
-            # batch doc ids are base-offset (batch_id << 40), so the id
-            # SPAN, not the doc count, sizes the range cut
-            bounds = tokens.agg(
-                F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"),
-                F.count_distinct("doc_id").alias("n"),
-            ).collect()[0]
-            if bounds["n"] is None or bounds["n"] == 0:
-                merged = encode_postings_segmented(
-                    tokens, self.config.block_size, 1, n_docs=0
-                )
-            else:
-                span = int(bounds["hi"]) - int(bounds["lo"]) + 1
-                merged = encode_postings_segmented(
-                    tokens, self.config.block_size,
-                    derive_n_segments(int(bounds["n"]),
-                                      self.config.docs_per_segment),
-                    n_docs=span, doc_base=int(bounds["lo"]),
-                )
-        elif layout == "termwise":
-            from ..operators.postings import (
-                POSTINGS_SCHEMA,
-                _make_merger,
-            )
-
-            segs = self.spark.read.option(
-                "basePath", self.segments_dir
-            ).parquet(os.path.join(self.segments_dir, "segment=*"))
-            merged = segs.groupBy("term").applyInPandas(
-                _make_merger(self.config.block_size), schema=POSTINGS_SCHEMA
-            )
-        else:
-            raise ValueError(f"unknown layout {layout!r}")
-        merged.write.mode("overwrite").parquet(self.global_dir)
-        return self.spark.read.parquet(self.global_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -421,8 +64,8 @@ class MergePolicy:
     generation of the next tier. Only similar-sized generations ever
     merge, so a stream of B appends costs each document O(log_mf B)
     rewrites total — vs the O(B) of re-compacting the whole index every
-    few batches (the write-amplification trap ADVICE r4 flagged in the
-    old ``compact_every`` full merge)."""
+    few batches (the write-amplification trap ADVICE r4 flagged in a
+    fixed-cadence full merge)."""
 
     #: members per size tier before that tier merges (>= 2: a 1-way
     #: "merge" would loop forever and tier_of's log base needs > 1)
@@ -452,14 +95,16 @@ class MergePolicy:
 @dataclass
 class SegmentedIndexWriter:
     """Incremental append + background compaction over the SEGMENTED
-    CompactIndex layout — the engine's ``IndexWriter`` analog for the
-    recommended scale artifact (the reference's CREATE-mode IndexWriter
+    CompactIndex layout — the engine's ``IndexWriter`` analog and its
+    only on-disk index format (the reference's CREATE-mode IndexWriter
     lifecycle, ``indexing/MsMarcoIndexer.java:49-59``, where each flush
     adds a segment and background merges fold small segments together).
 
     Layout under ``index_dir``::
 
-        _manifest.jsonl     append-only log; one row per committed op
+        _manifest.jsonl     append-only log; one row per committed op,
+                            with its lineage: blob rows per segment
+                            (``segment_rows``) and ``wall_s``
         seg-<id>/           parquet postings rows (segment int +
                             POSTINGS_SCHEMA; per-segment df/cf, NO gdf
                             inline — appends never rewrite old segments)
@@ -510,13 +155,13 @@ class SegmentedIndexWriter:
     @classmethod
     def open(cls, spark: SparkSession, index_dir: str) -> "SegmentedIndexWriter":
         """Rehydrate a writer over an existing index dir, restoring the
-        BuildConfig (analyzer etc.) and keys persisted at first commit —
-        the same contract as the pipeline's ``_config.json`` (an index
-        built with ``--analyzer simple`` must be searched with the same
-        chain, ADVICE r1). A new (empty) dir opens with defaults; a dir
-        that HAS commits but predates the sidecar refuses — guessing
-        the analyzer here would tokenize the next append with the wrong
-        chain and then stamp that wrong guess as authoritative."""
+        BuildConfig (analyzer etc.) and keys persisted at first commit
+        (an index built with ``--analyzer simple`` must be searched with
+        the same chain, ADVICE r1). A new (empty) dir opens with
+        defaults; a dir that HAS commits but predates the sidecar
+        refuses — guessing the analyzer here would tokenize the next
+        append with the wrong chain and then stamp that wrong guess as
+        authoritative."""
         p = os.path.join(index_dir, "_config.json")
         if not os.path.exists(p):
             if os.path.exists(os.path.join(index_dir, "_manifest.jsonl")):
@@ -531,21 +176,17 @@ class SegmentedIndexWriter:
         with open(p) as f:
             raw = json.load(f)
         if "keys" not in raw and "config_hash" in raw:
-            # an IndexBuildPipeline _config.json (stage-keyed build
-            # dir), not a writer sidecar: appending generations here
-            # would interleave gen rows into the pipeline's manifest —
-            # a later `index` resume crashes on the op rows and
-            # retrieve would auto-detect seg-* and silently serve ONLY
-            # the appended batch, dropping the pipeline's corpus
+            # the retired staged-pipeline layout's _config.json: its
+            # manifest rows are keyed by stage, not generation, so
+            # state() could not read them, and appending here would mix
+            # two layouts in one dir
             raise ValueError(
-                f"{index_dir} is an IndexBuildPipeline build dir "
-                "(its _config.json carries config_hash, no writer "
-                "keys); resume it with IndexBuildPipeline / the "
-                "`index` command, or point the writer at a different "
+                f"{index_dir} is a staged pipeline build dir (per-stage "
+                "parquet + stage manifest), a layout this engine no "
+                "longer reads; rebuild it with `index` into a new "
                 "directory"
             )
         keys = tuple(raw.pop("keys", ("conv_id", "turn_idx")))
-        raw.pop("config_hash", None)
         stored_fp = raw.pop("fp_version", None)
         cfg = BuildConfig(**{
             k: v for k, v in raw.items()
@@ -564,8 +205,8 @@ class SegmentedIndexWriter:
                 f"{index_dir} was committed under batch-fingerprint "
                 f"format v{stored_fp or 1}; this binary computes "
                 f"v{FP_VERSION}, so replay deduplication cannot see "
-                "the existing entries. Re-ingest into a fresh dir (or "
-                "export the index via compact and continue there)"
+                "the existing entries. Rebuild into a fresh dir with "
+                "`index` / `ingest`"
             )
         return w
 
@@ -655,6 +296,31 @@ class SegmentedIndexWriter:
             .write.mode("overwrite")
             .parquet(self._gdf_dir(gen))
         )
+
+    def _write_generation(self, st: dict, seg: DataFrame, t0: float) -> dict:
+        """Write ``seg`` (blob rows with batch-local segment ids) as the
+        next generation plus its gdf sidecar, and return the manifest
+        fields every op shares. Segment ids are offset into the
+        writer's global segment-id space so no two generations collide.
+        The lineage (blob rows per segment, ``segment_rows[i]`` for
+        segment ``seg_base + i``) comes from the same one aggregate
+        that yields the generation's segment span."""
+        gen, base = st["next_gen"], int(st["seg_base"])
+        seg.withColumn(
+            "segment", (F.col("segment") + F.lit(base)).cast("int")
+        ).write.mode("overwrite").parquet(self._gen_dir(gen))
+        written = self.spark.read.parquet(self._gen_dir(gen))
+        self._write_gdf_sidecar(gen, written)
+        rows = dict(written.groupBy("segment").count().collect())
+        span = max(rows) - base + 1 if rows else 0
+        return {
+            "gen": gen,
+            "gdf": True,
+            "seg_base": base,
+            "seg_span": span,
+            "segment_rows": [int(rows.get(base + i, 0)) for i in range(span)],
+            "wall_s": round(time.time() - t0, 3),
+        }
 
     @staticmethod
     def _entry_bounds(e: dict) -> tuple[int, int] | None:
@@ -766,6 +432,7 @@ class SegmentedIndexWriter:
             encode_postings_segmented,
         )
 
+        t0 = time.time()
         if os.path.exists(self.config_path):
             # fail BEFORE the build, not at commit time, when this
             # writer's config disagrees with the index's persisted one
@@ -811,28 +478,13 @@ class SegmentedIndexWriter:
             )
             stats = idx.stats
             release = idx
-        # NOTE: batch-local segment ids are offset into the writer's
-        # global segment-id space so no two generations collide
-        gen = st["next_gen"]
-        seg = seg.withColumn(
-            "segment",
-            (F.col("segment") + F.lit(int(st["seg_base"]))).cast("int"),
-        )
-        seg.write.mode("overwrite").parquet(self._gen_dir(gen))
-        written = self.spark.read.parquet(self._gen_dir(gen))
-        self._write_gdf_sidecar(gen, written)
-        hi = written.agg(F.max("segment").alias("hi")).collect()[0]["hi"]
         entry = {
             "op": "append",
-            "gen": gen,
-            "gdf": True,
+            **self._write_generation(st, seg, t0),
             "batch": fp,
             "n_docs": int(stats.n_docs),
             "total_cf": int(stats.total_cf),
             "doc_base": int(st["doc_base"]),
-            "seg_base": int(st["seg_base"]),
-            "seg_span": int((hi - st["seg_base"] + 1) if hi is not None
-                            else 0),
             "completed_at": time.time(),
         }
         self._commit(entry)
@@ -853,6 +505,7 @@ class SegmentedIndexWriter:
             postings_to_tokens,
         )
 
+        t0 = time.time()
         st = self.state()
         live = {e["gen"]: e for e in st["live"]}
         if gens is None:
@@ -890,19 +543,9 @@ class SegmentedIndexWriter:
                               self.config.docs_per_segment),
             n_docs=span, with_gdf=False, doc_base=doc_lo,
         )
-        gen = st["next_gen"]
-        seg = seg.withColumn(
-            "segment",
-            (F.col("segment") + F.lit(int(st["seg_base"]))).cast("int"),
-        )
-        seg.write.mode("overwrite").parquet(self._gen_dir(gen))
-        written = self.spark.read.parquet(self._gen_dir(gen))
-        self._write_gdf_sidecar(gen, written)
-        hi = written.agg(F.max("segment").alias("hi")).collect()[0]["hi"]
         entry = {
             "op": "compact",
-            "gen": gen,
-            "gdf": True,
+            **self._write_generation(st, seg, t0),
             "replaces": [int(g) for g in gens],
             "n_docs": int(merged_docs),
             **({"doc_lo": int(doc_lo), "doc_hi": int(doc_lo + span)}
@@ -910,9 +553,6 @@ class SegmentedIndexWriter:
             "total_cf": sum(
                 int(live[g].get("total_cf", 0)) for g in gens
             ),
-            "seg_base": int(st["seg_base"]),
-            "seg_span": int((hi - st["seg_base"] + 1) if hi is not None
-                            else 0),
             "completed_at": time.time(),
         }
         self._commit(entry)
@@ -991,7 +631,13 @@ class SegmentedIndexWriter:
 
         st = self.state()
         if not st["live"]:
-            raise FileNotFoundError(f"no live segments in {self.index_dir}")
+            # also what a retired exported artifact (postings/ +
+            # _stats.json, no manifest) looks like to the writer
+            raise FileNotFoundError(
+                f"no live segments in {self.index_dir}: build it with "
+                "`index` (an exported postings/ + _stats.json artifact "
+                "is a retired layout and must be rebuilt)"
+            )
         paths = [self._gen_dir(e["gen"]) for e in st["live"]]
         base = self.spark.read.parquet(*paths)
         if all(e.get("gdf") for e in st["live"]):
@@ -1021,7 +667,6 @@ def stream_append(
     writer: SegmentedIndexWriter,
     stream_df: DataFrame,
     checkpoint_dir: str,
-    compact_every: int | None = None,
     merge_policy: MergePolicy | None = None,
     trigger: dict | None = None,
     query_name: str = "lms_stream_append",
@@ -1053,9 +698,8 @@ def stream_append(
     runs synchronously inside ``foreachBatch`` (Spark gives foreachBatch
     no true background thread), lengthening the occasional micro-batch
     by the merge cost; the tiering keeps that cost proportional to the
-    tier being folded, not to the index. ``merge_policy=None`` with
-    ``compact_every=None`` disables compaction. ``compact_every=N`` is
-    the back-compat spelling of ``MergePolicy(merge_factor=N)``.
+    tier being folded, not to the index. ``merge_policy=None``
+    disables compaction.
 
     ``trigger``: ``writeStream`` trigger kwargs. Defaults to
     ``{"availableNow": True}`` — drain everything currently in the
@@ -1066,19 +710,13 @@ def stream_append(
     Returns the started ``StreamingQuery``; callers
     ``awaitTermination()`` / ``stop()`` it.
     """
-    policy = merge_policy
-    if policy is None and compact_every:
-        # compact_every=1 used to mean "full merge after every batch";
-        # the nearest tiered policy is the most eager valid factor (2),
-        # not a crash at stream setup
-        policy = MergePolicy(merge_factor=max(2, int(compact_every)))
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         writer.append(batch_df)
-        if policy is not None:
-            writer.maybe_compact(policy)
+        if merge_policy is not None:
+            writer.maybe_compact(merge_policy)
 
     return (
         stream_df.writeStream

@@ -1,5 +1,6 @@
 """End-to-end CLI drive: index -> retrieve -> evaluate -> qpp ->
-sparsevecs over a tmp dir (the reference's index.sh/retrieve.sh shape)."""
+sparsevecs over one index dir (the reference's index.sh/retrieve.sh
+shape)."""
 
 from __future__ import annotations
 
@@ -8,7 +9,7 @@ import os
 
 import pytest
 
-from lucene_msmarco_spark.cli import load_pipeline_index, main
+from lucene_msmarco_spark.cli import main
 from lucene_msmarco_spark.sources.transcripts import generate_transcripts
 
 
@@ -30,26 +31,51 @@ def workdir(spark, tmp_path_factory):
     return d, inp
 
 
-def test_cli_index_retrieve_evaluate_qpp(workdir, capsys):
+def _last_json(capsys) -> dict:
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def _manifest(index_dir: str) -> list[dict]:
+    with open(os.path.join(index_dir, "_manifest.jsonl")) as f:
+        return [json.loads(ln) for ln in f if ln.strip()]
+
+
+def test_cli_index_retrieve_evaluate_qpp(workdir, capsys, spark):
+    """The one-format chain on one dir: index -> re-run (no-op) ->
+    index of a different input (refused) -> retrieve bm25 (Block-Max
+    engine) and lmdir (row-level engine) -> evaluate -> qpp ->
+    sparsevecs; the index's manifest carries per-segment lineage."""
     d, inp = workdir
     idx_dir = str(d / "index")
     main(["index", "--input", inp, "--out", idx_dir])
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["executed_stages"] == [
-        "doc_ids", "tokens_tf", "doc_stats", "term_stats", "postings"
-    ]
-    assert out["rows"]["doc_ids"] == 200
+    out = _last_json(capsys)
+    assert out["appended"] and out["n_docs"] == 200
+    assert out["live_generations"] == 1
 
-    # resume: nothing re-runs
+    (entry,) = _manifest(idx_dir)
+    assert entry["op"] == "append" and entry["wall_s"] > 0
+    assert len(entry["segment_rows"]) == entry["seg_span"] >= 1
+    assert all(n > 0 for n in entry["segment_rows"])
+
+    # re-run with the same input: its fingerprint is committed, no-op
     main(["index", "--input", inp, "--out", idx_dir])
-    out2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out2["executed_stages"] == []
+    out2 = _last_json(capsys)
+    assert not out2["appended"]
+    assert out2["n_docs"] == 200 and out2["next_gen"] == out["next_gen"]
+
+    # an edited input into the same dir: refused, pointing at ingest
+    edited = str(d / "input_edited")
+    spark.read.parquet(inp).filter("turn_idx % 2 = 0").write.mode(
+        "overwrite").parquet(edited)
+    with pytest.raises(SystemExit, match="ingest"):
+        main(["index", "--input", edited, "--out", idx_dir])
+    assert _manifest(idx_dir) == [entry]
 
     res_path = str(d / "run.res")
     main(["retrieve", "--index", idx_dir, "--queries",
           str(d / "queries.tsv"), "--model", "bm25", "--k", "20",
           "--out", res_path])
-    capsys.readouterr()
+    assert _last_json(capsys)["engine"] == "bmw"
     assert os.path.exists(res_path)  # spark text output dir
     import glob
 
@@ -59,8 +85,15 @@ def test_cli_index_retrieve_evaluate_qpp(workdir, capsys):
     assert lines
     assert all(len(ln.split("\t")) == 6 for ln in lines)
 
+    res_lm = str(d / "run_lmdir.res")
+    main(["retrieve", "--index", idx_dir, "--queries",
+          str(d / "queries.tsv"), "--model", "lmdir", "--k", "5",
+          "--out", res_lm])
+    assert _last_json(capsys)["engine"] == "rows"
+    assert glob.glob(os.path.join(res_lm, "part-*"))
+
     main(["evaluate", "--res", res_path, "--qrels", str(d / "qrels.txt")])
-    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    summary = _last_json(capsys)
     assert set(summary) == {"recall_quirk", "map", "p_at_5", "ndcg_100"}
 
     main(["qpp", "--index", idx_dir, "--queries", str(d / "queries.tsv"),
@@ -71,36 +104,26 @@ def test_cli_index_retrieve_evaluate_qpp(workdir, capsys):
 
     vec_dir = str(d / "vecs")
     main(["sparsevecs", "--index", idx_dir, "--out", vec_dir])
-    out3 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out3["rows"] > 0
+    assert _last_json(capsys)["rows"] > 0
 
 
-def test_load_pipeline_index_roundtrip(spark, workdir):
-    from lucene_msmarco_spark.operators.retrieval import search
-
-    d, inp = workdir
-    idx_dir = str(d / "index")
-    if not os.path.exists(os.path.join(idx_dir, "_manifest.jsonl")):
-        main(["index", "--input", inp, "--out", idx_dir])
-    idx = load_pipeline_index(spark, idx_dir)
-    qdf = spark.createDataFrame(
-        [("q1", "ricufex kekegra")], "qid string, qtext string"
-    )
-    run = search(idx, qdf, model="bm25", k=5).collect()
-    assert len(run) > 0
-
-
-def test_load_pipeline_index_restores_analyzer(spark, workdir):
+def test_cli_index_restores_analyzer(spark, workdir, capsys):
     """ADVICE r1: an index built with a non-default analyzer must be
-    rehydrated with that same analyzer (query compilation follows it)."""
+    reopened with that same analyzer (query compilation follows it),
+    and a conflicting --analyzer on a re-run is refused."""
+    from lucene_msmarco_spark.cli import load_serving_index
+
     d, inp = workdir
     idx_dir = str(d / "index_simple")
     main(["index", "--input", inp, "--out", idx_dir,
           "--analyzer", "simple"])
-    idx = load_pipeline_index(spark, idx_dir)
-    assert idx.analyzer == "simple"
+    capsys.readouterr()
+    assert load_serving_index(spark, idx_dir).analyzer == "simple"
     assert json.load(open(os.path.join(idx_dir, "_config.json")))[
         "analyzer"] == "simple"
+    with pytest.raises(SystemExit, match="mix token spaces"):
+        main(["index", "--input", inp, "--out", idx_dir,
+              "--analyzer", "english"])
 
 
 def test_cli_ingest_and_bmw_retrieve(workdir, capsys, spark):
@@ -158,8 +181,7 @@ def test_cli_ingest_and_bmw_retrieve(workdir, capsys, spark):
     from lucene_msmarco_spark.cli import load_serving_index
     from lucene_msmarco_spark.operators.retrieval import search
 
-    kind, compact = load_serving_index(spark, sidx)
-    assert kind == "compact"
+    compact = load_serving_index(spark, sidx)
     assert compact.analyzer == "english"
     rows = search(compact.to_inverted_index(),
                   spark.createDataFrame(
@@ -173,19 +195,10 @@ def test_cli_ingest_and_bmw_retrieve(workdir, capsys, spark):
             float(r["score"]), 4)
     assert got and got == want
 
-    # non-BM25 model over the compact layout: rows-engine fallback
-    res2 = str(d / "run_lmdir.res")
-    main(["retrieve", "--index", sidx, "--queries",
-          str(d / "queries.tsv"), "--model", "lmdir", "--k", "5",
-          "--out", res2])
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["engine"] == "rows"
-    assert glob.glob(os.path.join(res2, "part-*"))
 
-
-def test_cli_compact_merge_and_export(workdir, capsys, spark):
-    """compact: force-merge a writer dir, then export it (and a
-    pipeline dir) as a CompactIndex artifact retrieve can serve."""
+def test_cli_compact_merge(workdir, capsys, spark):
+    """compact: force-merge an index dir's live generations; retrieve
+    serves the merged dir through the Block-Max path."""
     import glob
 
     d, inp = workdir
@@ -206,30 +219,12 @@ def test_cli_compact_merge_and_export(workdir, capsys, spark):
     assert out["merged"] == [0, 1, 2]
     assert out["live_generations"] == 1 and out["n_docs"] == 200
 
-    # export the merged writer dir -> CompactIndex.save artifact
-    art = str(d / "artifact")
-    main(["compact", "--index", sidx, "--out", art])
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["from"] == "compact" and out["n_docs"] == 200
-    assert os.path.exists(os.path.join(art, "_stats.json"))
-
-    # retrieve serves the exported artifact through the BMW path
-    res_path = str(d / "run_art.res")
-    main(["retrieve", "--index", art, "--queries",
+    res_path = str(d / "run_merged.res")
+    main(["retrieve", "--index", sidx, "--queries",
           str(d / "queries.tsv"), "--k", "10", "--out", res_path])
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["engine"] == "bmw"
     assert glob.glob(os.path.join(res_path, "part-*"))
-
-    # a pipeline dir exports too (rows -> compact conversion)
-    idx_dir = str(d / "index")
-    if not os.path.exists(os.path.join(idx_dir, "_manifest.jsonl")):
-        main(["index", "--input", inp, "--out", idx_dir])
-        capsys.readouterr()
-    art2 = str(d / "artifact_from_pipeline")
-    main(["compact", "--index", idx_dir, "--out", art2])
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["from"] == "rows" and out["n_docs"] == 200
 
 
 def test_cli_ann(workdir, capsys, spark):
@@ -273,14 +268,10 @@ def test_cli_guardrails(workdir, capsys, spark):
     """Misuse paths fail loudly with a message, not a traceback or a
     silently-wrong answer."""
     d, inp = workdir
-    idx_dir = str(d / "index")
-    if not os.path.exists(os.path.join(idx_dir, "_manifest.jsonl")):
-        main(["index", "--input", inp, "--out", idx_dir])
-        capsys.readouterr()
 
-    # compact (merge mode) on a pipeline dir: clear refusal
-    with pytest.raises(SystemExit, match="not a SegmentedIndexWriter"):
-        main(["compact", "--index", idx_dir])
+    # compact on a dir holding no index: clear refusal
+    with pytest.raises(SystemExit, match="not an index dir"):
+        main(["compact", "--index", str(d / "nope_compact")])
 
     # ann: external queries with a self-search method
     with pytest.raises(SystemExit, match="only supported with"):
@@ -300,10 +291,12 @@ def test_cli_guardrails(workdir, capsys, spark):
         main(["ingest", "--input", "db.transcripts",
               "--index", str(d / "nope_idx2"), "--stream"])
 
-    # ingest into a pipeline BUILD dir: refuse with a pointer, don't
-    # crash deep in writer.state()
-    with pytest.raises(SystemExit, match="IndexBuildPipeline output"):
-        main(["ingest", "--input", inp, "--index", idx_dir])
+    # events: a hostile --watermark is refused before any Spark work
+    with pytest.raises(SystemExit, match="watermark"):
+        main(["events", "--input", str(d / "nope_ev"),
+              "--out", str(d / "nope_ev_out"),
+              "--watermark", "1 hour) UNION SELECT 1 --"])
+    assert not os.path.exists(str(d / "nope_ev_out_ckpt"))
 
     # ann ivf: a loaded quantizer fixes n_lists; conflicting flag errors
     import numpy as np
@@ -456,25 +449,54 @@ def test_cli_ingest_stream_backfill(workdir, capsys, spark):
 
 
 def test_cli_guardrails_round3(workdir, capsys, spark, tmp_path):
-    """Round-5 review guardrails: (a) ingest refuses a pipeline build
-    dir even when the kill landed before the first stage commit
-    (_config.json present, manifest absent); (b) dedup rejects a
-    --min-jaccard that minhash would silently ignore; (c) retrieve and
-    compact exit cleanly (no stack trace) on a pre-sidecar writer
-    dir."""
+    """Review guardrails: (a) dirs in the retired layouts (a staged
+    pipeline build dir, an exported postings/ + _stats.json artifact)
+    end in a one-line refusal that names the layout and says to rebuild
+    with `index`, from every command that opens an index; (b) dedup
+    rejects a --min-jaccard that minhash would silently ignore; (c)
+    retrieve and compact exit cleanly (no stack trace) on a pre-sidecar
+    writer dir."""
     d, inp = workdir
+    queries = str(d / "queries.tsv")
 
-    # (a) pipeline-shaped config (config_hash, no writer keys), no
-    # manifest yet — exactly what a build killed in stage 1 leaves
-    broken = tmp_path / "killed_pipeline"
-    broken.mkdir()
-    (broken / "_config.json").write_text(
+    # (a) a pipeline build dir: stage-keyed manifest + config_hash sidecar
+    pipe = tmp_path / "pipeline_dir"
+    (pipe / "doc_ids").mkdir(parents=True)
+    (pipe / "_config.json").write_text(
         json.dumps({"analyzer": "english", "config_hash": "deadbeef"})
     )
-    with pytest.raises(SystemExit) as ei:
-        main(["ingest", "--input", inp, "--index", str(broken)])
-    assert "IndexBuildPipeline" in str(ei.value)
-    capsys.readouterr()
+    (pipe / "_manifest.jsonl").write_text(
+        json.dumps({"stage": "doc_ids", "rows": 200}) + "\n"
+    )
+    # ... and a CompactIndex.save artifact: postings/ + _stats.json
+    art = tmp_path / "export_dir"
+    (art / "postings").mkdir(parents=True)
+    (art / "_stats.json").write_text(json.dumps(
+        {"n_docs": 200, "avgdl": 5.0, "total_cf": 1000,
+         "analyzer": "english"}
+    ))
+    for legacy, layout in ((pipe, "staged pipeline build dir"),
+                           (art, "_stats.json")):
+        argvs = [
+            ["retrieve", "--index", str(legacy), "--queries", queries,
+             "--out", str(tmp_path / "r.res")],
+            ["qpp", "--index", str(legacy), "--queries", queries,
+             "--res", str(tmp_path / "r.res")],
+            ["sparsevecs", "--index", str(legacy),
+             "--out", str(tmp_path / "v")],
+        ]
+        if legacy is pipe:
+            argvs += [
+                ["index", "--input", inp, "--out", str(legacy)],
+                ["ingest", "--input", inp, "--index", str(legacy)],
+            ]
+        for argv in argvs:
+            with pytest.raises(SystemExit) as ei:
+                main(argv)
+            msg = str(ei.value)
+            assert layout in msg and "`index`" in msg, (argv, msg)
+            assert "\n" not in msg
+        capsys.readouterr()
 
     # (b) --min-jaccard with minhash: refused, not silently ignored
     with pytest.raises(SystemExit) as ei:
@@ -494,7 +516,7 @@ def test_cli_guardrails_round3(workdir, capsys, spark, tmp_path):
     for argv in (
         ["retrieve", "--index", str(pre), "--queries",
          str(d / "queries.tsv"), "--out", str(tmp_path / "r.res")],
-        ["compact", "--index", str(pre), "--out", str(tmp_path / "a")],
+        ["compact", "--index", str(pre)],
     ):
         with pytest.raises(SystemExit) as ei:
             main(argv)

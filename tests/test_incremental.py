@@ -1,4 +1,5 @@
-"""Checkpoint-resumable staged build + streaming incremental ingest."""
+"""The segmented index writer (append, compaction, lineage, kill-safety)
+and the Structured-Streaming ingest over it."""
 
 from __future__ import annotations
 
@@ -10,133 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lucene_msmarco_spark.operators.postings import postings_to_tokens
-from lucene_msmarco_spark.sources.transcripts import (
-    generate_transcripts,
-    transcripts_local,
-)
-from lucene_msmarco_spark.streaming.incremental import (
-    BuildConfig,
-    IncrementalIngest,
-    IndexBuildPipeline,
-    input_fingerprint,
-)
-
-N = 200
-
-
-@pytest.fixture(scope="module")
-def input_path(spark, tmp_path_factory):
-    p = str(tmp_path_factory.mktemp("pipeline") / "input")
-    generate_transcripts(spark, n_turns=N, seed=42,
-                         num_partitions=4).write.parquet(p)
-    return p
-
-
-def test_pipeline_runs_and_records_lineage(spark, input_path, tmp_path):
-    out = str(tmp_path / "index")
-    pipe = IndexBuildPipeline(spark, input_path, out)
-    manifest = pipe.run()
-    assert set(manifest) >= {
-        "doc_ids", "tokens_tf", "doc_stats", "term_stats", "postings"
-    }
-    assert manifest["_executed"]["stages"] == [
-        "doc_ids", "tokens_tf", "doc_stats", "term_stats", "postings"
-    ]
-    for stage in ("doc_ids", "tokens_tf", "postings"):
-        row = manifest[stage]
-        assert row["rows"] > 0
-        assert sum(p["rows"] for p in row["partitions"]) == row["rows"]
-        assert os.path.exists(os.path.join(out, stage, "_SUCCESS"))
-    # doc_stats covers every input row
-    assert manifest["doc_stats"]["rows"] == N
-
-
-def test_pipeline_resume_skips_completed(spark, input_path, tmp_path):
-    out = str(tmp_path / "index")
-    p1 = IndexBuildPipeline(spark, input_path, out)
-    m1 = p1.run()
-    assert len(m1["_executed"]["stages"]) == 5
-    # fresh pipeline object = process restart; nothing should re-run
-    p2 = IndexBuildPipeline(spark, input_path, out)
-    m2 = p2.run()
-    assert m2["_executed"]["stages"] == []
-
-
-def test_pipeline_resume_after_partial_kill(spark, input_path, tmp_path):
-    out = str(tmp_path / "index")
-    pipe = IndexBuildPipeline(spark, input_path, out)
-    full_manifest = pipe.run()
-    # simulate a kill after stage 2 by dropping later manifest rows +
-    # stage outputs
-    rows = []
-    with open(pipe.manifest_path) as f:
-        for line in f:
-            r = json.loads(line)
-            if r["stage"] in ("doc_ids", "tokens_tf"):
-                rows.append(line)
-    with open(pipe.manifest_path, "w") as f:
-        f.writelines(rows)
-    import shutil
-
-    for stage in ("doc_stats", "term_stats", "postings"):
-        shutil.rmtree(os.path.join(out, stage))
-
-    m = IndexBuildPipeline(spark, input_path, out).run()
-    assert m["_executed"]["stages"] == [
-        "doc_stats", "term_stats", "postings"
-    ]
-    # identical row counts to the uninterrupted build
-    for stage in ("doc_stats", "term_stats", "postings"):
-        assert m[stage]["rows"] == full_manifest[stage]["rows"]
-
-
-def test_config_change_invalidates(spark, input_path, tmp_path):
-    out = str(tmp_path / "index")
-    IndexBuildPipeline(spark, input_path, out).run()
-    m = IndexBuildPipeline(
-        spark, input_path, out, BuildConfig(analyzer="whitespace")
-    ).run()
-    assert len(m["_executed"]["stages"]) == 5
-
-
-def test_input_fingerprint_changes_with_data(tmp_path):
-    d = tmp_path / "data"
-    d.mkdir()
-    (d / "a.parquet").write_bytes(b"xx")
-    f1 = input_fingerprint(str(d))
-    (d / "b.parquet").write_bytes(b"yy")
-    assert input_fingerprint(str(d)) != f1
-
-
-def test_stage_outputs_match_direct_build(spark, input_path, tmp_path):
-    from lucene_msmarco_spark.operators.index import (
-        assign_doc_ids,
-        build_index,
-    )
-
-    out = str(tmp_path / "index")
-    IndexBuildPipeline(spark, input_path, out).run()
-    tokens_pipe = (
-        spark.read.parquet(os.path.join(out, "tokens_tf"))
-        .toPandas().sort_values(["term", "doc_id"]).reset_index(drop=True)
-    )
-    docs = assign_doc_ids(spark.read.parquet(input_path),
-                          ["conv_id", "turn_idx"])
-    idx = build_index(docs, analyzer="english", cache=False)
-    tokens_direct = (
-        idx.tokens.toPandas()
-        .sort_values(["term", "doc_id"]).reset_index(drop=True)
-    )
-    assert (tokens_pipe["term"].values == tokens_direct["term"].values).all()
-    assert (tokens_pipe["tf"].values == tokens_direct["tf"].values).all()
-    # postings stage decodes back to the tokens stage exactly
-    post = spark.read.parquet(os.path.join(out, "postings"))
-    back = (
-        postings_to_tokens(post).toPandas()
-        .sort_values(["term", "doc_id"]).reset_index(drop=True)
-    )
-    assert (back["tf"].values == tokens_pipe["tf"].values).all()
-    assert (back["doclen"].values == tokens_pipe["doclen"].values).all()
+from lucene_msmarco_spark.sources.transcripts import transcripts_local
 
 
 def _land(spark, pdf, src, tmp, name):
@@ -152,59 +27,6 @@ def _land(spark, pdf, src, tmp, name):
         .write.parquet(staging, mode="overwrite")
     part = glob.glob(os.path.join(staging, "part-*.parquet"))[0]
     shutil.move(part, str(src / f"{name}.parquet"))
-
-
-def test_incremental_ingest_and_merge(spark, tmp_path):
-    src = tmp_path / "landing"
-    src.mkdir()
-    work = str(tmp_path / "work")
-
-    pdf_all = transcripts_local(120, seed=42)
-
-    _land(spark, pdf_all.iloc[:60], src, tmp_path, "f1")
-    ing = IncrementalIngest(spark, str(src), work)
-    n1 = ing.ingest_available()
-    assert n1 >= 1
-
-    _land(spark, pdf_all.iloc[60:], src, tmp_path, "f2")
-    n2 = ing.ingest_available()
-    assert n2 >= 1
-
-    # third run: nothing new
-    assert ing.ingest_available() == 0
-
-    # default layout: doc-range SEGMENTED (shared code path with
-    # SegmentedIndexWriter.compact) — per-segment df rows + global gdf
-    merged = ing.merge_segments()
-    assert "segment" in merged.columns and "gdf" in merged.columns
-    toks = postings_to_tokens(merged)
-    n_docs_seen = toks.select("doc_id").distinct().count()
-    # docs whose text analyzed to zero tokens don't appear in postings
-    assert 100 <= n_docs_seen <= 120
-    # df consistency on the merged table: per-segment dfs sum to the
-    # token-level df, and gdf equals that sum on every row
-    sums = merged.groupBy("term").agg(
-        F.sum("df").alias("df_sum"), F.first("gdf").alias("gdf1")
-    )
-    chk = sums.join(
-        toks.groupBy("term").agg(
-            F.count_distinct("doc_id").alias("df2")
-        ),
-        "term",
-    ).filter(
-        (F.col("df_sum") != F.col("df2")) | (F.col("gdf1") != F.col("df2"))
-    )
-    assert chk.count() == 0
-
-    # legacy termwise layout still available (toy-scale path). NB the
-    # second merge OVERWRITES work/postings, so decode the termwise
-    # table itself (the earlier `toks` lazily reads the replaced files)
-    termwise = ing.merge_segments(layout="termwise")
-    toks2 = postings_to_tokens(termwise)
-    chk2 = termwise.select("term", "df").join(
-        toks2.groupBy("term").agg(F.count(F.lit(1)).alias("df2")), "term"
-    ).filter(F.col("df") != F.col("df2"))
-    assert chk2.count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -348,6 +170,76 @@ def test_segmented_writer_kill_resume_idempotent(spark, tmp_path,
     _assert_same_run(_bmw_run(spark, w.load()), _bmw_run(spark, full))
 
 
+def test_pipeline_resume_after_partial_kill(spark, tmp_path, monkeypatch):
+    """Kill a compaction between its parquet write and the manifest
+    commit: the live set and the answers are unchanged, and the retry
+    overwrites the orphan generation and merges exactly once."""
+    w, pdf, batches = _writer_fixture(spark, tmp_path, n_batches=2)
+    entries = [w.append(spark.createDataFrame(b)) for b in batches]
+    before = _bmw_run(spark, w.load())
+
+    def die(entry):
+        raise RuntimeError("simulated kill before manifest commit")
+
+    monkeypatch.setattr(w, "_commit", die)
+    with pytest.raises(RuntimeError):
+        w.compact()
+    monkeypatch.undo()
+    orphan = w.state()["next_gen"]
+    assert os.path.exists(w._gen_dir(orphan))
+    assert [e["gen"] for e in w.state()["live"]] == [
+        e["gen"] for e in entries
+    ]
+    _assert_same_run(before, _bmw_run(spark, w.load()))
+
+    centry = w.compact()
+    assert centry["gen"] == orphan
+    assert [e["op"] for e in w._entries()] == ["append", "append", "compact"]
+    _assert_same_run(before, _bmw_run(spark, w.load()))
+
+
+def test_pipeline_resume_skips_completed(spark, tmp_path):
+    """A restarted build (a fresh writer opened over the same dir) skips
+    every batch that already committed: re-appending them is a no-op
+    that returns the committed entries."""
+    from lucene_msmarco_spark.streaming.incremental import (
+        SegmentedIndexWriter,
+    )
+
+    w, pdf, batches = _writer_fixture(spark, tmp_path, n=120, n_batches=2)
+    entries = [w.append(spark.createDataFrame(b)) for b in batches]
+    w2 = SegmentedIndexWriter.open(spark, w.index_dir)
+    assert [w2.append(spark.createDataFrame(b)) for b in batches] == entries
+    assert len(w2._entries()) == len(batches)
+
+
+def test_pipeline_runs_and_records_lineage(spark, tmp_path):
+    """Every append and compaction records its lineage in its manifest
+    entry: blob rows per segment (equal to the generation's parquet)
+    and wall time."""
+    from lucene_msmarco_spark.streaming.incremental import BuildConfig
+
+    w, pdf, batches = _writer_fixture(spark, tmp_path, n=240, n_batches=2)
+    w.config = BuildConfig(analyzer="simple", docs_per_segment=30)
+
+    def check(e):
+        per = dict(
+            spark.read.parquet(w._gen_dir(e["gen"]))
+            .groupBy("segment").count().collect()
+        )
+        assert len(e["segment_rows"]) == e["seg_span"] == len(per)
+        assert e["segment_rows"] == [
+            per[e["seg_base"] + i] for i in range(e["seg_span"])
+        ]
+        assert e["wall_s"] > 0
+
+    entries = [w.append(spark.createDataFrame(b)) for b in batches]
+    for e in entries:
+        assert e["seg_span"] == 4  # 120 docs at 30 docs/segment
+        check(e)
+    check(w.compact())
+
+
 def test_segmented_writer_mixed_compaction_counts_docs(spark, tmp_path):
     """Merging a prior compaction WITH a later append must record the
     full merged doc count (regression: summing only the append entries
@@ -470,6 +362,24 @@ def test_writer_fingerprint_sum_not_xor(spark, tmp_path):
     assert w._fingerprint(b1) == w._fingerprint(b1_rev)
 
 
+def test_input_fingerprint_changes_with_data(spark, tmp_path):
+    """The batch content address changes when the input does — one value
+    edited in place (same row count) or one row added — so a re-run
+    over an edited input is never mistaken for a committed batch."""
+    from lucene_msmarco_spark.streaming.incremental import (
+        SegmentedIndexWriter,
+    )
+
+    w = SegmentedIndexWriter(spark, str(tmp_path / "fpdata"))
+    schema = "conv_id string, turn_idx int, text string"
+    rows = [("a", 0, "alpha"), ("a", 1, "beta")]
+    f1 = w._fingerprint(spark.createDataFrame(rows, schema))
+    edited = [("a", 0, "alpha"), ("a", 1, "betb")]
+    assert w._fingerprint(spark.createDataFrame(edited, schema)) != f1
+    added = rows + [("b", 0, "gamma")]
+    assert w._fingerprint(spark.createDataFrame(added, schema)) != f1
+
+
 def test_stream_append_equals_full_rebuild(spark, tmp_path):
     """Structured-Streaming ingestion (file source, one file per
     micro-batch via maxFilesPerTrigger + availableNow) must equal the
@@ -513,11 +423,14 @@ def test_stream_append_equals_full_rebuild(spark, tmp_path):
 
 
 def test_stream_append_compacts_on_cadence(spark, tmp_path):
-    """compact_every folds live generations through the streaming sink;
-    results are unchanged by the merge."""
+    """The merge policy folds live generations through the streaming
+    sink; results are unchanged by the merge."""
     import os as _os
 
-    from lucene_msmarco_spark.streaming.incremental import stream_append
+    from lucene_msmarco_spark.streaming.incremental import (
+        MergePolicy,
+        stream_append,
+    )
 
     w, pdf, batches = _writer_fixture(spark, tmp_path)
     src = tmp_path / "stream_src"
@@ -532,9 +445,10 @@ def test_stream_append_compacts_on_cadence(spark, tmp_path):
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(str(src))
     )
-    q = stream_append(w, stream, str(tmp_path / "ckpt"), compact_every=2)
+    q = stream_append(w, stream, str(tmp_path / "ckpt"),
+                      merge_policy=MergePolicy(merge_factor=2))
     assert q.awaitTermination(300)
-    # 3 appends with compact-at-2: gens 0,1 -> compacted, + append 2
+    # 3 appends with merge_factor=2: gens 0,1 -> compacted, + append 2
     ops = [e["op"] for e in w._entries()]
     assert "compact" in ops
     assert len(w.state()["live"]) < len(batches)
@@ -686,31 +600,6 @@ def test_compact_reclaims_dead_generation_dirs(spark, tmp_path):
         _bmw_run(spark, w.load()),
         _bmw_run(spark, _full_rebuild(spark, pdf)),
     )
-
-
-def test_merge_segments_empty_source(spark, tmp_path):
-    """merge before any ingest (empty landing day) yields an empty
-    global table, not PATH_NOT_FOUND."""
-    ing = IncrementalIngest(spark, str(tmp_path / "in"),
-                            str(tmp_path / "work"))
-    merged = ing.merge_segments()
-    assert merged.count() == 0
-
-
-def test_input_fingerprint_subsecond_rewrite(tmp_path):
-    """A same-size rewrite with a different sub-second mtime must change
-    the fingerprint (whole-second truncation would let resume serve a
-    stale index)."""
-    d = tmp_path / "inp"
-    d.mkdir()
-    f = d / "part-0.parquet"
-    f.write_bytes(b"aaaa")
-    t = 1_700_000_000
-    os.utime(f, ns=(t * 10**9 + 111, t * 10**9 + 111))
-    f1 = input_fingerprint(str(d))
-    f.write_bytes(b"bbbb")  # same size
-    os.utime(f, ns=(t * 10**9 + 222, t * 10**9 + 222))
-    assert input_fingerprint(str(d)) != f1
 
 
 def test_merge_policy_rejects_degenerate_factor():

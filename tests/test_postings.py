@@ -1,9 +1,9 @@
 """Compressed postings segments (varint/delta/block-max) + BMW fast path.
 
-Gates per SURVEY.md §4: (a) ``decode(encode(x)) == x``; (b) the salted
-two-stage build is result-identical to unsalted; (c) BMW returns the
-same top-k docs/ranks as exhaustive DataFrame scoring (safe pruning);
-(d) retrieval re-run from blobs matches retrieval from the tokens table.
+Gates per SURVEY.md §4: (a) ``decode(encode(x)) == x``; (b) block stats
+are valid bounds; (c) BMW returns the same top-k docs/ranks as
+exhaustive DataFrame scoring; (d) retrieval re-run from blobs matches
+retrieval from the tokens table.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from lucene_msmarco_spark.operators.postings import (
     CompactIndex,
     _round_half_away,
     bmw_search,
-    encode_postings,
+    encode_postings_segmented,
     postings_to_tokens,
 )
 from lucene_msmarco_spark.operators.retrieval import compile_queries, search
@@ -68,60 +68,6 @@ def test_delta_roundtrip(vals):
     assert np.array_equal(delta_decode(delta_encode(arr)), arr)
 
 
-def test_wand_matches_brute_force_randomized():
-    """Driver-side property test: random corpora/queries, tiny blocks (so
-    skipping logic is exercised hard), exact top-k equality."""
-    import math
-
-    from lucene_msmarco_spark.operators.postings import (
-        _encode_arrays,
-        _wand_one_query,
-    )
-
-    rng = np.random.default_rng(1234)
-    k1, b = 0.9, 0.4
-    for trial in range(25):
-        n_docs = int(rng.integers(30, 200))
-        n_terms = int(rng.integers(1, 6))
-        doclens = rng.integers(5, 120, size=n_docs)
-        avgdl = float(doclens.mean())
-        rows, brute = [], {}
-        for t in range(n_terms):
-            df = int(rng.integers(1, n_docs + 1))
-            docs = np.sort(rng.choice(n_docs, size=df, replace=False))
-            tfs = rng.integers(1, 6, size=df)
-            dls = doclens[docs]
-            qw = float(rng.integers(1, 3))
-            idf = math.log(1 + (n_docs - df + 0.5) / (df + 0.5))
-            for d, tf, dl in zip(docs, tfs, dls):
-                w = idf * tf * (k1 + 1) / (
-                    tf + k1 * (1 - b + b * dl / avgdl)
-                )
-                brute[d] = brute.get(int(d), 0.0) + qw * w
-
-            class R:
-                pass
-
-            r = R()
-            (r.doc_blob, r.tf_blob, r.len_blob, r.block_size,
-             r.n_entries, r.block_last, r.block_max_tf,
-             r.block_min_dl) = _encode_arrays(
-                docs.astype(np.int64), tfs.astype(np.int64),
-                dls.astype(np.int64), int(rng.integers(2, 9)),
-            )
-            r.df = df
-            r.qw = qw
-            rows.append(r)
-        k = int(rng.integers(1, 30))
-        expect = sorted(brute.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-        got = _wand_one_query(rows, k, k1, b, avgdl, float(n_docs))
-        assert [d for d, _ in got] == [d for d, _ in expect], (
-            f"trial {trial}"
-        )
-        for (gd, gs), (ed, es) in zip(got, expect):
-            assert abs(gs - es) <= 1e-9 * max(1.0, abs(es))
-
-
 def test_varint_known_bytes():
     assert varint_encode(np.array([0])) == b"\x00"
     assert varint_encode(np.array([127])) == b"\x7f"
@@ -150,8 +96,24 @@ def tokens_pd(idx):
     )
 
 
+def _docs_by_segment(postings) -> dict[int, set[int]]:
+    """Doc ids each segment's blob rows hold, decoded through
+    postings_to_tokens one segment at a time."""
+    from pyspark.sql import functions as F
+
+    segs = [r.segment for r in postings.select("segment").distinct().collect()]
+    return {
+        int(s): {
+            int(r.doc_id) for r in postings_to_tokens(
+                postings.filter(F.col("segment") == s)
+            ).select("doc_id").collect()
+        }
+        for s in segs
+    }
+
+
 def test_postings_roundtrip(idx, tokens_pd):
-    enc = encode_postings(idx.tokens, block_size=16)
+    enc = encode_postings_segmented(idx.tokens, block_size=16, n_segments=3)
     back = (
         postings_to_tokens(enc).toPandas()
         .sort_values(["term", "doc_id"]).reset_index(drop=True)
@@ -161,39 +123,33 @@ def test_postings_roundtrip(idx, tokens_pd):
     assert (back["doc_id"].values == tokens_pd["doc_id"].values).all()
     assert (back["tf"].values == tokens_pd["tf"].values).all()
     assert (back["doclen"].values == tokens_pd["doclen"].values).all()
-
-
-def test_salted_build_identical(idx, tokens_pd):
-    """Force EVERY term through the salted partial+merge path."""
-    enc = encode_postings(
-        idx.tokens, block_size=16, salt_df_threshold=0, n_salts=4
-    )
-    back = (
-        postings_to_tokens(enc).toPandas()
-        .sort_values(["term", "doc_id"]).reset_index(drop=True)
-    )
-    assert (back["doc_id"].values == tokens_pd["doc_id"].values).all()
-    assert (back["tf"].values == tokens_pd["tf"].values).all()
-    # df/cf on the merged rows must match the tokens-level truth
-    enc_pd = enc.toPandas().set_index("term")
+    # per-segment df/cf sum to the tokens-level truth, and gdf is global
+    enc_pd = enc.toPandas()
+    got = enc_pd.groupby("term").agg(df=("df", "sum"), cf=("cf", "sum"),
+                                     gdf=("gdf", "max"))
     truth = tokens_pd.groupby("term").agg(
         df=("doc_id", "count"), cf=("tf", "sum")
     )
-    for term, row in truth.iterrows():
-        assert enc_pd.loc[term, "df"] == row["df"]
-        assert enc_pd.loc[term, "cf"] == row["cf"]
+    assert (got["df"] == truth["df"]).all()
+    assert (got["cf"] == truth["cf"]).all()
+    assert (got["gdf"] == truth["df"]).all()
 
 
 def test_block_stats_are_valid_bounds(idx):
-    enc = encode_postings(idx.tokens, block_size=8).toPandas()
-    back = {r.term: r for r in enc.itertuples()}
+    enc = encode_postings_segmented(
+        idx.tokens, block_size=8, n_segments=2, with_gdf=False
+    ).toPandas()
+    back = {(r.term, r.segment): r for r in enc.itertuples()}
     toks = idx.tokens.toPandas()
-    for term, grp in toks.groupby("term"):
-        r = back[term]
+    width = -(-(int(toks["doc_id"].max()) + 1) // 2)
+    toks["segment"] = toks["doc_id"] // width
+    for (term, segment), grp in toks.groupby(["term", "segment"]):
+        r = back[(term, segment)]
         grp = grp.sort_values("doc_id")
         tfs = grp["tf"].values
         dls = grp["doclen"].values
         bs = r.block_size
+        assert len(r.block_last) == -(-len(tfs) // bs)
         for bi in range(len(r.block_last)):
             lo, hi = bi * bs, min((bi + 1) * bs, len(tfs))
             assert r.block_max_tf[bi] == tfs[lo:hi].max()
@@ -207,9 +163,10 @@ def test_block_stats_are_valid_bounds(idx):
 
 @pytest.fixture(scope="module")
 def compact(idx):
-    # termwise (one blob per term) layout — the situational per-qid WAND
-    # path; the DEFAULT layout is segmented (see test_from_index_default_*)
-    return CompactIndex.from_index(idx, block_size=16, n_segments=None)
+    """from_index with NO layout argument — must pick the segmented
+    partition-local encode (the fused english build tags its tokens as
+    doc-complete per partition)."""
+    return CompactIndex.from_index(idx, block_size=16)
 
 
 def _runs_equal(a, b, score_tol=1e-9):
@@ -237,22 +194,6 @@ def test_bmw_equals_exhaustive(spark, idx, compact, k):
         .orderBy("qid", "rank").collect()
     )
     _runs_equal(exact, bmw)
-
-
-def test_compact_index_save_load(spark, idx, compact, tmp_path):
-    path = str(tmp_path / "cidx")
-    compact.save(path)
-    loaded = CompactIndex.load(spark, path)
-    assert loaded.stats == compact.stats
-    assert loaded.analyzer == compact.analyzer
-    qdf = spark.createDataFrame(QUERIES, "qid string, qtext string")
-    qt = compile_queries(qdf, analyzer="english")
-    cfg = BM25Config(k1=0.9, b=0.4)
-    a = bmw_search(compact, qt, k=10, cfg=cfg).orderBy(
-        "qid", "rank").collect()
-    b = bmw_search(loaded, qt, k=10, cfg=cfg).orderBy(
-        "qid", "rank").collect()
-    _runs_equal(a, b)
 
 
 def test_search_from_rehydrated_blobs(spark, idx, compact):
@@ -295,9 +236,9 @@ def test_bmw_smallfloat_equals_exhaustive(spark, idx, compact, compact_seg,
                                           seg):
     """BM25Config.smallfloat_norms must mean the same thing on every
     scoring surface: exhaustive Catalyst scoring (bm25_weight's
-    smallfloat4_doclen column) and both compact-postings paths (batched
-    segmented scorer, unsegmented WAND — which must also quantize its
-    block-min-dl bounds) produce identical runs under the flag."""
+    smallfloat4_doclen column) and the batched segmented scorer, over
+    both the partition-local (seg=False) and the doc-range (seg=True)
+    segment layouts, produce identical runs under the flag."""
     from lucene_msmarco_spark.config import EngineConfig
 
     cfg = BM25Config(k1=0.9, b=0.4, smallfloat_norms=True)
@@ -327,69 +268,40 @@ def test_segmented_rows_bounded_and_disjoint(idx, compact_seg, tokens_pd):
     per_term_entries: dict = {}
     for r in rows:
         assert r.n_entries <= seg_cap
-        from lucene_msmarco_spark.operators.postings import _decode_row
-        docs, tfs, dls = _decode_row(r)
-        lo = r.segment * (max_doc + 1) / n_segments
-        hi = (r.segment + 1) * (max_doc + 1) / n_segments
-        assert (docs >= lo).all() and (docs < hi).all()
         assert r.gdf == truth_df[r.term]
         per_term_entries[r.term] = per_term_entries.get(r.term, 0) + int(
             r.n_entries
         )
     assert per_term_entries == {t: int(c) for t, c in truth_df.items()}
-
-
-def test_segmented_save_load_roundtrip(spark, idx, compact_seg, tmp_path):
-    path = str(tmp_path / "cidx_seg")
-    compact_seg.save(path)
-    loaded = CompactIndex.load(spark, path)
-    assert loaded.segmented
-    qdf = spark.createDataFrame(QUERIES[:2], "qid string, qtext string")
-    qt = compile_queries(qdf, analyzer="english")
-    cfg = BM25Config(k1=0.9, b=0.4)
-    a = bmw_search(compact_seg, qt, k=10, cfg=cfg).orderBy(
-        "qid", "rank").collect()
-    b = bmw_search(loaded, qt, k=10, cfg=cfg).orderBy(
-        "qid", "rank").collect()
-    _runs_equal(a, b)
+    for s, docs in _docs_by_segment(compact_seg.postings).items():
+        lo = s * (max_doc + 1) / n_segments
+        hi = (s + 1) * (max_doc + 1) / n_segments
+        assert all(lo <= d < hi for d in docs)
 
 
 # ---------------------------------------------------------------------------
 # default layout: segmented, partition-local off the fused build
 # ---------------------------------------------------------------------------
 
-@pytest.fixture(scope="module")
-def compact_auto(idx):
-    """from_index with NO layout argument — must pick the segmented
-    partition-local encode (the fused english build tags its tokens as
-    doc-complete per partition)."""
-    return CompactIndex.from_index(idx, block_size=16)
-
-
-def test_from_index_default_is_segmented(idx, compact_auto, tokens_pd):
+def test_from_index_default_is_segmented(idx, compact, tokens_pd):
     """Default layout contract (VERDICT r3 next-#2): segmented schema,
     lossless content, doc-disjoint segments, correct global df."""
-    assert compact_auto.segmented
+    assert "segment" in compact.postings.columns
     back = (
-        postings_to_tokens(compact_auto.postings).toPandas()
+        postings_to_tokens(compact.postings).toPandas()
         .sort_values(["term", "doc_id"]).reset_index(drop=True)
     )
     assert (back["term"].values == tokens_pd["term"].values).all()
     assert (back["doc_id"].values == tokens_pd["doc_id"].values).all()
     assert (back["tf"].values == tokens_pd["tf"].values).all()
     assert (back["doclen"].values == tokens_pd["doclen"].values).all()
-    rows = compact_auto.postings.collect()
-    from lucene_msmarco_spark.operators.postings import _decode_row
-    seg_of_doc: dict[int, set] = {}
     truth_df = tokens_pd.groupby("term")["doc_id"].count().to_dict()
-    for r in rows:
+    for r in compact.postings.select("term", "gdf").collect():
         assert r.gdf == truth_df[r.term]
-        docs, _, _ = _decode_row(r)
-        for d in docs:
-            seg_of_doc.setdefault(int(d), set()).add(r.segment)
     # hash-clustered segments partition the doc space: every doc's
     # postings live in exactly ONE segment
-    assert all(len(s) == 1 for s in seg_of_doc.values())
+    per_seg = list(_docs_by_segment(compact.postings).values())
+    assert sum(len(d) for d in per_seg) == len(set().union(*per_seg))
 
 
 def test_partition_local_encode_single_blob_shuffle(idx):
@@ -405,7 +317,7 @@ def test_partition_local_encode_single_blob_shuffle(idx):
 
 
 @pytest.mark.parametrize("layout", ["auto", 4])
-def test_bmw_auto_layout_equals_exhaustive(spark, idx, compact_auto,
+def test_bmw_auto_layout_equals_exhaustive(spark, idx, compact,
                                            compact_seg, layout):
     qdf = spark.createDataFrame(QUERIES, "qid string, qtext string")
     cfg = BM25Config(k1=0.9, b=0.4)
@@ -414,7 +326,7 @@ def test_bmw_auto_layout_equals_exhaustive(spark, idx, compact_auto,
         .orderBy("qid", "rank").collect()
     )
     qt = compile_queries(qdf, analyzer="english")
-    compact_x = compact_auto if layout == "auto" else compact_seg
+    compact_x = compact if layout == "auto" else compact_seg
     bmw = (
         bmw_search(compact_x, qt, k=10, cfg=cfg)
         .orderBy("qid", "rank").collect()
@@ -447,7 +359,7 @@ def test_from_index_auto_without_doc_complete_partitions(spark, idx):
         term_stats=idx.term_stats, stats=idx.stats, analyzer=idx.analyzer,
     )
     compact = CompactIndex.from_index(idx2, block_size=16)
-    assert compact.segmented
+    assert "segment" in compact.postings.columns
     # tiny corpus -> data-sized segment count collapses to 1
     segs = [r.segment for r in compact.postings.select("segment")
             .distinct().collect()]
@@ -465,7 +377,7 @@ def test_from_index_auto_without_doc_complete_partitions(spark, idx):
 # ---------------------------------------------------------------------------
 
 @pytest.mark.parametrize("digits", [1, 4])
-def test_bmw_rank_round_matches_rounded_oracle(spark, idx, compact_auto,
+def test_bmw_rank_round_matches_rounded_oracle(spark, idx, compact,
                                                digits):
     """rank_round must reproduce rank-by-(round(score,d) desc, doc asc)
     over the FULL scored candidate set — the rule the bmw_topk contract
@@ -478,7 +390,7 @@ def test_bmw_rank_round_matches_rounded_oracle(spark, idx, compact_auto,
     )
     qt = compile_queries(qdf, analyzer="english")
     got = (
-        bmw_search(compact_auto, qt, k=10, rank_round=digits)
+        bmw_search(compact, qt, k=10, rank_round=digits)
         .orderBy("qid", "rank").toPandas()
     )
     for qid, grp in allscored.groupby("qid"):
@@ -520,10 +432,6 @@ def test_segmented_encode_rebases_on_doc_base(spark):
     """doc_base must cut the RELATIVE id range into segments: without
     it, a base-offset batch (incremental append) clamps every posting
     into the last segment — one giant task."""
-    from lucene_msmarco_spark.operators.postings import (
-        encode_postings_segmented,
-    )
-
     base, n = 1_000, 200
     rows = [(f"t{i % 7}", base + i, 1 + i % 3, 5) for i in range(n)]
     tokens = spark.createDataFrame(
@@ -532,29 +440,17 @@ def test_segmented_encode_rebases_on_doc_base(spark):
     seg = encode_postings_segmented(
         tokens, n_segments=4, n_docs=n, doc_base=base, with_gdf=False
     )
-    from lucene_msmarco_spark.operators.postings import _decode_row
-
-    pdf = seg.toPandas()
-    assert sorted(pdf["segment"].unique()) == [0, 1, 2, 3]
+    by_seg = _docs_by_segment(seg)
+    assert sorted(by_seg) == [0, 1, 2, 3]
     # each segment covers its 50-doc slice of the RELATIVE range
-    for s, grp in pdf.groupby("segment"):
-        docs = np.concatenate(
-            [_decode_row(r)[0] for r in grp.itertuples()]
-        )
+    for s, docs in by_seg.items():
         lo, hi = base + 50 * s, base + 50 * (s + 1)
-        assert docs.min() >= lo and docs.max() < hi
+        assert min(docs) >= lo and max(docs) < hi
     # regression shape: WITHOUT doc_base all rows clamp to segment 3
     clamped = encode_postings_segmented(
         tokens, n_segments=4, n_docs=n, with_gdf=False
     ).toPandas()
     assert sorted(clamped["segment"].unique()) == [3]
-
-
-def test_rank_round_rejects_termwise_layout(spark, compact):
-    qdf = spark.createDataFrame(QUERIES[:1], "qid string, qtext string")
-    qt = compile_queries(qdf, analyzer="english")
-    with pytest.raises(ValueError, match="segmented"):
-        bmw_search(compact, qt, k=10, rank_round=4)
 
 
 def test_fused_stem_memo_is_capped(monkeypatch):
@@ -576,15 +472,15 @@ def test_fused_stem_memo_is_capped(monkeypatch):
     assert out[0].shape[0] == 30  # eviction never drops output rows
 
 
-def test_bmw_chunked_query_bag_equals_unchunked(spark, idx, compact_auto):
+def test_bmw_chunked_query_bag_equals_unchunked(spark, idx, compact):
     """max_batch_queries chunking is exact: per-qid results are
     independent, so a 5-query bag scored in 2-query chunks must equal
     the single-batch run row-for-row."""
     qdf = spark.createDataFrame(QUERIES, "qid string, qtext string")
     qt = compile_queries(qdf, analyzer="english")
-    a = bmw_search(compact_auto, qt, k=10).orderBy("qid", "rank").collect()
+    a = bmw_search(compact, qt, k=10).orderBy("qid", "rank").collect()
     b = bmw_search(
-        compact_auto, qt, k=10, max_batch_queries=2
+        compact, qt, k=10, max_batch_queries=2
     ).orderBy("qid", "rank").collect()
     _runs_equal(a, b)
 
@@ -600,7 +496,7 @@ def test_build_compact_index_equals_two_pass(spark, idx, tokens_pd):
     from lucene_msmarco_spark.operators.postings import build_compact_index
 
     one = build_compact_index(idx.docs, block_size=16)
-    assert one.segmented
+    assert "segment" in one.postings.columns
     assert one.stats == idx.stats
     back = (
         postings_to_tokens(one.postings).toPandas()
@@ -632,14 +528,14 @@ def test_build_compact_index_plan_is_exchange_free(idx):
     assert "MapInPandas" in above, above
 
 
-def test_bmw_score_block_rows_equals_unblocked(spark, idx, compact_auto):
+def test_bmw_score_block_rows_equals_unblocked(spark, idx, compact):
     """score_block_rows sub-blocking inside the segment task is
     bit-identical at any block size — a 1-row budget forces one block
     per query pair run and must reproduce the unbounded run exactly."""
     qdf = spark.createDataFrame(QUERIES, "qid string, qtext string")
     qt = compile_queries(qdf, analyzer="english")
-    a = bmw_search(compact_auto, qt, k=10).orderBy("qid", "rank").collect()
+    a = bmw_search(compact, qt, k=10).orderBy("qid", "rank").collect()
     b = bmw_search(
-        compact_auto, qt, k=10, score_block_rows=1
+        compact, qt, k=10, score_block_rows=1
     ).orderBy("qid", "rank").collect()
     _runs_equal(a, b, score_tol=0.0)

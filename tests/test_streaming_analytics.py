@@ -20,6 +20,7 @@ from lucene_msmarco_spark.streaming.analytics import (
     EVENTS_SCHEMA,
     cleanup_dirs,
     hourly_backfill,
+    interval_seconds,
     scratch_dirs,
     sessionize_backfill,
     split_bounds,
@@ -398,3 +399,41 @@ def test_sessionize_late_event_dropped(spark):
         assert rows == [(1, 1), (2, 1)]
     finally:
         cleanup_dirs(src, sink, ckpt)
+
+
+def test_drain_filter_keeps_null_keys(spark):
+    """The drain sentinel is filtered out NULL-safely: a NULL
+    event_type row (hourly) and a NULL user_id row (sessionize) survive
+    the filter, so each backfill equals its batch twin, whose groupBy /
+    window keeps the NULL group."""
+    ev = _mk_events(
+        spark,
+        [
+            (1, 0, 7, None, 1.0),
+            (2, 5, 7, "a", 2.0),
+            (3, 10, None, "a", 3.0),
+            (4, 20, None, "b", 4.0),
+        ],
+    )
+    for run, batch in (
+        (hourly_backfill, _batch_hourly(ev)),
+        (sessionize_backfill, _batch_sessionize(spark, ev)),
+    ):
+        src, sink, ckpt = scratch_dirs("lmst_null")
+        try:
+            ev.write.mode("overwrite").parquet(src + "/b0")
+            got = run(spark, src, sink, ckpt).select(*batch.columns)
+            assert _same_rows(got, batch)
+        finally:
+            cleanup_dirs(src, sink, ckpt)
+
+
+def test_watermark_is_parsed_not_pasted():
+    """--watermark is parsed as '<int> <unit>[s]' in Python: a day is a
+    fixed 86,400 s, and anything else (a SQL fragment included) raises
+    instead of reaching spark.sql."""
+    assert interval_seconds("1 day") == 86_400
+    assert interval_seconds("2 hours") == 7_200
+    for bad in ("1 hour) UNION SELECT 1 --", "2h", "1.5 hours", ""):
+        with pytest.raises(ValueError, match="watermark"):
+            interval_seconds(bad)
